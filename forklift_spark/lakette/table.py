@@ -649,14 +649,18 @@ class LaketteTable:
     def n_buckets(self) -> int:
         return int(self._raw_current()["n_buckets"])
 
-    def bucket_expr(self, prefix: str = "", n_buckets: int | None = None):
+    def bucket_expr(self, prefix: str = "", n_buckets: int | None = None,
+                    metadata: dict | None = None):
         """Deterministic hash bucket of the logical key — recomputable
         anywhere, so it is never stored in row data. `n_buckets` overrides
         the table's current bucket count (compact()'s re-bucketing path
         MUST share this definition — a divergent inline copy would silently
-        mis-route keys, see ADVICE.md)."""
-        cols = [F.col(prefix + c) for c in self.key_cols()]
-        n = self.n_buckets() if n_buckets is None else int(n_buckets)
+        mis-route keys, see ADVICE.md). `metadata` takes key columns and
+        bucket count from an already-loaded version dict instead of
+        re-reading CURRENT and the version file."""
+        meta = metadata if metadata is not None else self._raw_current()
+        cols = [F.col(prefix + c) for c in meta["key_cols"]]
+        n = int(meta["n_buckets"]) if n_buckets is None else int(n_buckets)
         return F.pmod(F.xxhash64(*cols), F.lit(n)).cast("int")
 
     def create_or_replace_view(

@@ -2,22 +2,31 @@
 
   lww_dedupe   in-batch last-writer-wins per key (agg-based argmax, with an
                optional salted two-phase variant for hot-key skew)
-  merge_into   key-partitioned copy-on-write MERGE INTO a lakette table with
-               cross-batch LWW, tombstoned deletes (confluence under any
-               event interleaving), additive schema evolution in the same
-               epoch, idempotent epoch markers (exactly-once), and
-               per-partition lineage rows.
+  merge_into   key-partitioned MERGE INTO a lakette table — copy-on-write
+               rewrite or merge-on-read append — with cross-batch LWW,
+               tombstoned deletes (confluence under any event
+               interleaving), additive schema evolution in the same epoch,
+               idempotent epoch markers (exactly-once), and per-partition
+               lineage rows.
 
 Scale design notes (the 100 TB story):
-  * The batch only ever joins against the hash buckets it touches — the
-    bucket set comes from a tiny distinct-aggregate over the deduped batch,
-    and file pruning is metadata-only on the driver. Write amplification is
-    bounded by touched buckets, not table size.
-  * LWW dedupe is `max_by(struct(*), seq)` — a hash aggregate with map-side
-    partial aggregation, cheaper than a window sort, and trivially saltable
-    into two phases when one key dominates.
-  * Everything is Column expressions inside whole-stage codegen; the only
-    Python on the data path is none at all (sha256 is JVM `sha2`).
+  * A copy-on-write epoch only ever reads the hash buckets the batch
+    touches — the bucket set comes from a tiny key-columns-only count
+    over the batch, and file pruning is metadata-only on the driver.
+    Write amplification is bounded by touched buckets, not table size.
+  * The copy-on-write merge is ONE fold (_cow_fold): stored rows of the
+    touched buckets and the batch events, in the same physical row shape
+    a merge-on-read append writes, are unioned, repartitioned once by
+    bucket, and resolved per (bucket, key) by the LWW argmax. The
+    writer's bucket repartition and key sort are already satisfied, so
+    an epoch moves each row through exactly one exchange — no join, no
+    cache, no pre-pass beyond the bucket count.
+  * LWW dedupe is `max_by(struct(*), seq)` — one aggregate, cheaper than
+    a window sort, and trivially saltable into two phases when one key
+    dominates an in-batch dedupe.
+  * Row resolution is Column expressions (sha256 is JVM `sha2`); the one
+    Python step on the data path is the data-file writer, a vectorized
+    `mapInArrow` task that streams Arrow batches into parquet files.
 """
 
 from __future__ import annotations
@@ -39,7 +48,12 @@ from ..lakette.table import (
 
 
 def _obs_count(obs: Observation, key: str) -> int:
-    """Read one long metric off an Observation, tolerating the EMPTY-EPOCH
+    """One long metric off an Observation (see _obs_value)."""
+    return int(_obs_value(obs, key))
+
+
+def _obs_value(obs: Observation, key: str):
+    """Read one metric off an Observation, tolerating the EMPTY-EPOCH
     edge: when the observed plan turns out empty at runtime, AQE's
     propagate-empty-relation re-optimization can drop the CollectMetrics
     node entirely, and Observation.get then dies in toPyRow (schema-less
@@ -51,7 +65,7 @@ def _obs_count(obs: Observation, key: str) -> int:
     GENUINE failure (Py4J connection loss, query error), corrupting the
     lineage and metrics records. Anything else re-raises."""
     try:
-        return int(obs.get.get(key) or 0)
+        return obs.get.get(key) or 0
     except Exception as e:
         # the dropped-CollectMetrics edge surfaces as a Py4JJavaError
         # wrapping java.lang.AssertionError (raised in
@@ -149,7 +163,7 @@ class MergeStats:
     evolved_columns: list[str] = field(default_factory=list)
     wall_sec: float = 0.0
     bucket_skew: float = 0.0  # max/median rows written per bucket this epoch
-    key_skew: float = 0.0  # max/mean input events per key (COW dedupe only)
+    key_skew: float = 0.0  # max/mean input events per key (COW fold / MOR in-batch dedupe)
     salt_buckets: int | None = None  # salting actually applied this epoch
     mode_used: str | None = None  # cow/mor actually applied (mode="auto" decides per epoch)
     #: buckets this epoch wrote to — fed back as auto_prev for the
@@ -288,11 +302,20 @@ def merge_into(
     any sequence of batches converges to the same table state (the property
     tests rely on this).
 
-    mode="cow" (copy-on-write): merge-join against the touched buckets of
-    the current snapshot and rewrite them — read-optimized, write cost ~
-    touched-bucket size per epoch.
-    mode="mor" (merge-on-read): append the deduped batch as delta files in
-    ONE Spark job; the per-key argmax is deferred to snapshot reads (and
+    mode="cow" (copy-on-write): rewrite the buckets the batch touches as
+    ONE fold — their stored rows and the raw batch events, projected into
+    the same physical row shape a merge-on-read append writes, are
+    unioned, repartitioned once by bucket and resolved per key by the LWW
+    argmax (an equal seq keeps the stored row; `overwrite=True` ranks the
+    batch first). The epoch runs the bucket count plus the write: one
+    exchange, no join, no cache. Read-optimized, write cost ~
+    touched-bucket size per epoch. `salt_buckets` and `dedupe_in_batch`
+    do not apply (recorded `salt_buckets` is None): the fold already
+    resolves duplicates, and its exchange is by bucket, where a hot key
+    costs one partition at most; `key_skew` is still recorded.
+    mode="mor" (merge-on-read): append the batch — deduped in-batch by
+    default (`dedupe_in_batch`, salted with `salt_buckets`) — as delta
+    files in ONE Spark job; the per-key argmax is deferred to snapshot reads (and
     folded away by compact()). Identical final semantics because every row
     carries `seq` and LWW-max is associative — this is the
     Iceberg-v2-style high-throughput ingest path.
@@ -307,8 +330,8 @@ def merge_into(
     consecutive stream epochs are statistically alike, so the decision
     costs ZERO extra jobs and lags a workload shift by exactly one
     epoch), else from one exact key-columns-only aggregate over the batch
-    (one-shot callers; for a cow decision its bucket counts are reused so
-    the epoch still runs the same number of jobs as fixed cow). An
+    (one-shot callers; for a cow decision its bucket counts are the COW
+    touched set, so the epoch runs the same jobs as fixed cow). An
     auto-picked epoch runs the IDENTICAL plan as the corresponding fixed
     mode (measured: BENCH/AUTO_MODE.md). Confluence makes any mix of
     modes converge to the same state, so the choice is purely a cost
@@ -348,13 +371,14 @@ def merge_into(
         stats.skipped = True
         return stats
 
-    key_cols = table.key_cols()
     # RAW metadata (manifest refs + counters, no file list): the epoch path
     # must never materialize every manifest shard — the pruned snapshot
     # read below loads only the touched buckets' shards, and the commit
     # works at the ref level, so driver I/O per epoch is O(touched
-    # buckets) end to end (VERDICT r3 #1)
+    # buckets) end to end (VERDICT r3 #1). Loaded ONCE: everything below
+    # (keys, schema, bucket expression) reads this dict.
     meta = table._raw_current()
+    key_cols = list(meta["key_cols"])
 
     # --- table CHECK constraints (lakette/table.py add_constraint):
     # enforced on every full-row event BEFORE any write — deletes are
@@ -374,7 +398,7 @@ def merge_into(
 
     # partial-update semantics (operators/patch.py): tables created with
     # column_lww=True resolve merges PER COLUMN ('P' events write only
-    # their non-NULL columns); COW-only in v1, auto resolves to cow
+    # their non-NULL columns), in every mode
     column_lww = bool(meta.get("column_lww"))
     if column_lww:
         from .patch import ensure_patch_mode
@@ -386,38 +410,37 @@ def merge_into(
 
     # --- schema evolution (C4): additive ALTER folded into this commit
     new_schema, added = _schema_evolve(
-        table.schema(), batch_df.schema, envelope_only={"op", "event_ts", "schema_ver"}
+        T.StructType.fromJson(meta["schema"]), batch_df.schema,
+        envelope_only={"op", "event_ts", "schema_ver"},
     )
     stats.evolved_columns = added
     payload_cols = [
         f.name for f in new_schema.fields if f.name not in META_COL_NAMES and f.name not in key_cols
     ]
 
-    # batch_rows must mean INPUT events (throughput metrics), not the
-    # post-dedupe survivor count — observe on the incoming frame so the
-    # count rides along with whichever job executes below (no extra pass).
-    # EXCEPT in the prefilter strategy: its plan scans the source in TWO
-    # branches (winner agg + semi join), which would double-count a plain
-    # row observation — there, observe sum-of-group-counts on the winner
-    # aggregate instead (each input row lands in exactly one group).
-    obs_in = Observation(f"in-{query_id}-{epoch}")
+    types = {f.name: f.dataType for f in new_schema.fields}
+    bucket = table.bucket_expr(metadata=meta)
+    # per-bucket batch event counts: one key-columns-only aggregate, run
+    # at most once per epoch — the exact auto decision and the COW
+    # touched-bucket set share it
+    counts: dict[int, int] | None = None
 
     if mode == "auto":
         # Per-epoch storage-layout decision (Hudi-style), resolved BEFORE
-        # the dedupe branch so an auto-picked mor epoch runs the IDENTICAL
-        # one-exchange plan as mode="mor" (r5: the old placement forced the
-        # dedupe shuffle + cache on every auto epoch — a ~50% tax on small
-        # epochs, measured in BENCH/AUTO_MODE.md). The decision inputs are
-        # one KEY-COLUMNS-ONLY aggregate over the batch (column-pruned
-        # scan, tiny count shuffle) + the maintained bucket counters (zero
-        # manifest loads): copy-on-write rewrites every row of the touched
-        # key groups, so when those groups dwarf the batch (trickle
-        # updates against a big table) appending merge-on-read deltas is
-        # cheaper by existing/batch; when the batch is commensurate with
-        # the groups (bulk load / hot rewrite) COW keeps the table
-        # read-optimized for one proportionate write. Confluence makes any
-        # mix of modes converge to the same state (property tests), so the
-        # choice is purely a cost matter; recorded as `mode_used`.
+        # any batch plan is built so an auto-picked epoch runs the
+        # IDENTICAL plan as the corresponding fixed mode (r5: the old
+        # placement forced the dedupe shuffle + cache on every auto epoch —
+        # a ~50% tax on small epochs, measured in BENCH/AUTO_MODE.md). The
+        # decision inputs are the per-bucket batch counts + the maintained
+        # bucket counters (zero manifest loads): copy-on-write rewrites
+        # every row of the touched key groups, so when those groups dwarf
+        # the batch (trickle updates against a big table) appending
+        # merge-on-read deltas is cheaper by existing/batch; when the batch
+        # is commensurate with the groups (bulk load / hot rewrite) COW
+        # keeps the table read-optimized for one proportionate write.
+        # Confluence makes any mix of modes converge to the same state
+        # (property tests), so the choice is purely a cost matter;
+        # recorded as `mode_used`.
         if (
             auto_prev is not None
             and not auto_prev.skipped
@@ -430,85 +453,23 @@ def merge_into(
             # touched set against the current counters. A one-epoch lag on
             # a workload shift merely runs one epoch in the other mode —
             # confluence makes that a cost blip, never a correctness event.
-            auto_touched = None
-            existing_rows = _touched_group_rows(table, meta, auto_prev.touched)
-            mode = (
-                "mor"
-                if existing_rows > auto_cow_factor * max(auto_prev.batch_rows, 1)
-                else "cow"
-            )
+            in_rows, touched = auto_prev.batch_rows, auto_prev.touched
         else:
-            # exact decision (one-shot callers / first epoch): one
-            # key-columns-only aggregate over the batch
-            decide = (
-                batch_df.select(table.bucket_expr().alias("_bucket"))
-                .groupBy("_bucket")
-                .count()
-                .collect()
-            )
-            in_rows = sum(r["count"] for r in decide)
-            auto_touched = [r["_bucket"] for r in decide]
-            existing_rows = _touched_group_rows(table, meta, auto_touched)
-            mode = (
-                "mor"
-                if existing_rows > auto_cow_factor * max(in_rows, 1)
-                else "cow"
-            )
-    else:
-        auto_touched = None
-
-    dedupe = dedupe_in_batch or mode != "mor"
-
-    # --- in-batch LWW dedupe (C2), optionally salted (C5).
-    # For merge-on-read this is an optional *optimization*: the snapshot
-    # read resolves LWW anyway, so the high-throughput path skips the dedupe
-    # shuffle entirely and moves each byte through exactly ONE exchange (the
-    # bucket repartition in _merge_mor). COW requires it (one row per key
-    # before the join). dedupe_strategy="prefilter" is the wide-row variant
-    # (see lww_dedupe): payload bytes never shuffle for losing rows.
-    if column_lww and dedupe:
-        from .patch import column_lww_dedupe
-
-        batch_df = batch_df.observe(obs_in, F.count(F.lit(1)).alias("rows_in"))
-        batch = column_lww_dedupe(
-            batch_df,
-            key_cols,
-            [c for c in payload_cols if c in batch_df.columns],
-            salt_buckets=salt_buckets,
-            count_col="_n",
-        )
-    elif column_lww:
-        # mor fast path, dedupe skipped: raw patch events append as-is
-        # (mor_patch_row_shape tags each row's written columns; the read
-        # fold resolves) — one exchange per ingested byte, same as the
-        # row-level engine
-        batch_df = batch_df.observe(obs_in, F.count(F.lit(1)).alias("rows_in"))
-        batch = batch_df
-    elif dedupe and dedupe_strategy == "prefilter":
-        winners = (
-            batch_df.groupBy(*key_cols)
-            .agg(F.max("seq").alias("seq"), F.count(F.lit(1)).alias("_n"))
-            .observe(obs_in, F.sum("_n").cast("long").alias("rows_in"))
-        )
-        survivors = batch_df.join(winners.drop("_n"), [*key_cols, "seq"], "left_semi")
-        batch = lww_dedupe(survivors, key_cols, "seq", salt_buckets=salt_buckets)
-    elif dedupe:
-        batch_df = batch_df.observe(obs_in, F.count(F.lit(1)).alias("rows_in"))
-        # the per-key event count rides the dedupe aggregate for free; the
-        # COW path reads it off the cached batch as the input-key-skew
-        # signal (adaptive salting) and it never reaches the data files
-        batch = lww_dedupe(
-            batch_df, key_cols, "seq", salt_buckets=salt_buckets, count_col="_n"
-        )
-    else:
-        batch_df = batch_df.observe(obs_in, F.count(F.lit(1)).alias("rows_in"))
-        batch = batch_df
-    batch = batch.withColumn("_bucket", table.bucket_expr())
+            # exact decision (one-shot callers / first epoch)
+            counts = _bucket_counts(batch_df, bucket)
+            in_rows, touched = sum(counts.values()), list(counts)
+        existing_rows = _touched_group_rows(table, meta, touched)
+        mode = "mor" if existing_rows > auto_cow_factor * max(in_rows, 1) else "cow"
 
     if mode == "mor":
+        batch, obs_in = _mor_batch(
+            batch_df, key_cols, payload_cols, name=f"in-{query_id}-{epoch}",
+            column_lww=column_lww, dedupe=dedupe_in_batch,
+            dedupe_strategy=dedupe_strategy, salt_buckets=salt_buckets,
+        )
         stats.mode_used = "mor"
         stats = _merge_mor(
-            table, batch, stats,
+            table, batch.withColumn("_bucket", bucket), stats,
             query_id=query_id, epoch=epoch, payload_cols=payload_cols,
             new_schema=new_schema, src_offsets=src_offsets, meta=meta,
             obs_in=obs_in, publish=publish,
@@ -517,106 +478,46 @@ def merge_into(
         _write_metrics(table, query_id, stats)
         return stats
 
-    # keep a dedicated reference to the CACHED plan: `batch` is rebound
-    # below (drop("_n")), and unpersisting the rebound variable would target
-    # a different plan, leaking the cached epoch blocks across a long
-    # streaming run (ADVICE.md r2)
-    cached = batch.cache()
-    batch = cached
-    try:
-        if auto_touched is not None:
-            # auto already counted buckets on the raw batch (dedupe never
-            # changes the key set) — reuse it instead of a second count
-            # job, so an auto-picked cow epoch runs the same NUMBER of
-            # jobs as fixed cow (the skew aggregate below materializes
-            # the cache and carries the input-rows observation)
-            touched = auto_touched
-        else:
-            per_bucket = batch.groupBy("_bucket").count().collect()
-            touched = [r["_bucket"] for r in per_bucket]
-        stats.touched = sorted(touched)
-        stats.touched_buckets = len(touched)
-        if "_n" in batch.columns:
-            sk = batch.agg(F.max("_n").alias("mx"), F.avg("_n").alias("mn")).collect()[0]
-            if sk["mn"]:
-                stats.key_skew = round(float(sk["mx"]) / float(sk["mn"]), 2)
-            batch = batch.drop("_n")
-        elif auto_touched is not None:
-            batch.count()  # materialize the cache (no _n to aggregate)
-        stats.batch_rows = _obs_count(obs_in, "rows_in")
-
-        stats.mode_used = "cow"
-
-        # --- read only the touched buckets of the current snapshot (pruned
-        # scan; ref-level manifest pruning — only touched shards are opened).
-        # exact_buckets=False: mid-rescale this COW rewrite must see and
-        # re-emit EVERY row of the old-spec files it replaces (sibling
-        # buckets' rows included — that is how COW epochs migrate groups)
-        existing = table.snapshot(
+    # --- copy-on-write: one bucket-partitioned LWW fold of the touched
+    # buckets' stored rows and the raw batch events (_cow_fold). The fold's
+    # exchange is by bucket and the argmax resolves a hot key inside its
+    # bucket's partition, so COW epochs never salt.
+    stats.mode_used = "cow"
+    stats.salt_buckets = None
+    if counts is None:
+        counts = _bucket_counts(batch_df, bucket)
+    touched = sorted(counts)
+    stats.touched = touched
+    stats.touched_buckets = len(touched)
+    new_files: list[dict] = []
+    if touched:
+        # read only the touched buckets of the current snapshot (pruned
+        # scan; ref-level manifest pruning — only touched shards are
+        # opened). exact_buckets=False: mid-rescale this COW rewrite must
+        # see and re-emit EVERY row of the old-spec files it replaces
+        # (sibling buckets' rows included — that is how COW epochs migrate
+        # groups)
+        stored = table.snapshot(
             spark, include_deleted=True, buckets=touched, metadata=meta,
             exact_buckets=False,
         )
-
-        # --- merge join: full outer on the logical key, LWW decision matrix
-        b = batch.alias("b")
-        e = existing.alias("e")
-        cond = [F.col(f"b.{k}").eqNullSafe(F.col(f"e.{k}")) for k in key_cols]
-        joined = e.join(b, cond, "full_outer")
-
-        if column_lww:
-            from .patch import patch_cow_select
-
-            sel = patch_cow_select(
-                batch.columns, existing.columns, key_cols, payload_cols
-            )
-        else:
-            from .patch import op_guard
-
-            take_b = (
-                F.col("b.seq").isNotNull()
-                if overwrite
-                else F.col("b.seq").isNotNull()
-                & (F.col("e.seq").isNull() | (F.col("b.seq") > F.col("e.seq")))
-            )
-            sel = [F.coalesce(F.col(f"b.{k}"), F.col(f"e.{k}")).alias(k) for k in key_cols]
-            for c in payload_cols:
-                b_c = F.col(f"b.{c}") if c in batch.columns else F.lit(None)
-                e_c = F.col(f"e.{c}") if c in existing.columns else F.lit(None)
-                sel.append(F.when(take_b, b_c).otherwise(e_c).alias(c))
-            sel.append(F.when(take_b, F.col("b.seq")).otherwise(F.col("e.seq")).alias("seq"))
-            content_new = (
-                F.sha2(F.col("b.content"), 256) if "content" in batch.columns else F.lit(None)
-            )
-            sel.append(
-                F.when(take_b, content_new).otherwise(F.col("e.content_sha")).alias("content_sha")
-            )
-            # op_guard: a 'P' patch event that wins a key on a ROW-LEVEL
-            # table raises inside the job (before anything commits) —
-            # silently applying it as a full row would overwrite good
-            # columns with its NULLs
-            sel.append(
-                F.when(take_b, op_guard(F.col("b.op")) == F.lit("D"))
-                .otherwise(F.coalesce(F.col("e.deleted"), F.lit(False)))
-                .alias("deleted")
-            )
-            sel.append(F.when(take_b, F.lit(1)).otherwise(F.lit(0)).alias("_applied"))
-        merged = joined.select(*sel)
-
         obs = Observation(f"merge-{query_id}-{epoch}")
-        merged = merged.observe(
-            obs, F.count(F.lit(1)).alias("rows"), F.sum("_applied").alias("applied")
+        folded = _cow_fold(
+            stored, batch_df, obs,
+            key_cols=key_cols, payload_cols=payload_cols, types=types,
+            bucket=bucket, n_partitions=len(touched), column_lww=column_lww,
+            overwrite=overwrite,
         )
-        merged = merged.withColumn("_bucket", table.bucket_expr()).drop("_applied")
-
-        # --- copy-on-write write of the touched buckets (S8): executors
-        # write final-named files + report manifests; one Spark job
-        snapshot_id = meta["snapshot_id"] + 1
+        # executors write final-named files + report manifests. The fold's
+        # output is already partitioned by _bucket into len(touched)
+        # partitions and ordered by (_bucket, *key_cols), so the writer's
+        # repartition and (key-order) sort plan away: one exchange per epoch
         new_files = _write_datafiles(
-            merged,
+            folded,
             root=table.root,
-            snapshot_id=snapshot_id,
+            snapshot_id=meta["snapshot_id"] + 1,
             delta=False,
-            n_partitions=max(1, len(touched)),
+            n_partitions=len(touched),
             key_col=key_cols[0],
             # COW rewrites whole buckets: base files come out in the
             # table's declared linear cluster order (keys as tie-break) —
@@ -625,43 +526,236 @@ def merge_into(
             max_rows_per_file=meta.get("target_file_rows"),
             stats_cols=_base_layout(meta)[1],
             bloom_cols=meta.get("bloom_cols"),
-            colmap=_write_colmap(meta, merged),
+            colmap=_write_colmap(meta, folded),
         )
+        stats.batch_rows = _obs_count(obs, "rows_in")
         stats.rows_rewritten = _obs_count(obs, "rows")
         stats.applied_rows = _obs_count(obs, "applied")
+        stats.key_skew = round(float(_obs_value(obs, "skew")), 2)
 
-        # --- atomic metadata commit, then marker (C6 ordering); the base
-        # version pins the snapshot this merge actually read, so an
-        # interleaving writer can never be silently overwritten.
-        # Replacement is expressed per (spec, bucket): during an online
-        # rescale the pruned read above also pulled the OLD-spec files the
-        # touched keys live in, every row read was re-emitted under the
-        # current spec, so those old files are replaced too — COW epochs
-        # migrate the groups they touch as a side effect.
-        replaced = {(nb, b % nb) for nb in _specs(meta) for b in touched}
-        if not publish:
-            stats.stage_id = table.stage_commit(
-                new_files=new_files,
-                replaced_buckets=replaced,
-                schema=new_schema,
-                writer={"query_id": query_id, "epoch": epoch},
-            )
-        else:
-            commit = table.commit_version(
-                new_files=new_files,
-                replaced_buckets=replaced,
-                schema=new_schema,
-                writer={"query_id": query_id, "epoch": epoch},
-                base_version=meta["version"],
-            )
-            stats.version, stats.snapshot_id = commit.version, commit.snapshot_id
-            _write_lineage(table, query_id, epoch, commit.snapshot_id, new_files, stats, src_offsets)
-            table.write_epoch_marker(query_id, epoch, commit.snapshot_id)
-    finally:
-        cached.unpersist()
+    # --- atomic metadata commit, then marker (C6 ordering); the base
+    # version pins the snapshot this merge actually read, so an
+    # interleaving writer can never be silently overwritten.
+    # Replacement is expressed per (spec, bucket): during an online
+    # rescale the pruned read above also pulled the OLD-spec files the
+    # touched keys live in, every row read was re-emitted under the
+    # current spec, so those old files are replaced too — COW epochs
+    # migrate the groups they touch as a side effect.
+    replaced = {(nb, b % nb) for nb in _specs(meta) for b in touched}
+    if not publish:
+        stats.stage_id = table.stage_commit(
+            new_files=new_files,
+            replaced_buckets=replaced,
+            schema=new_schema,
+            writer={"query_id": query_id, "epoch": epoch},
+        )
+    else:
+        commit = table.commit_version(
+            new_files=new_files,
+            replaced_buckets=replaced,
+            schema=new_schema,
+            writer={"query_id": query_id, "epoch": epoch},
+            base_version=meta["version"],
+        )
+        stats.version, stats.snapshot_id = commit.version, commit.snapshot_id
+        _write_lineage(table, query_id, epoch, commit.snapshot_id, new_files, stats, src_offsets)
+        table.write_epoch_marker(query_id, epoch, commit.snapshot_id)
     stats.wall_sec = round(time.monotonic() - t_start, 3)
     _write_metrics(table, query_id, stats)
     return stats
+
+
+def _bucket_counts(batch_df: DataFrame, bucket) -> dict[int, int]:
+    """Batch events per hash bucket — a key-columns-only aggregate
+    (column-pruned scan, tiny count shuffle)."""
+    rows = batch_df.select(bucket.alias("_bucket")).groupBy("_bucket").count().collect()
+    return {r["_bucket"]: r["count"] for r in rows}
+
+
+def _row_shape(
+    batch_cols: list[str],
+    key_cols: list[str],
+    payload_cols: list[str],
+    types: dict,
+    column_lww: bool,
+) -> list:
+    """The physical row a batch event (or in-batch-deduped row) is stored
+    as: key cols, payload cols, `seq`, `content_sha` = sha2(content),
+    `deleted` (deletes become tombstone rows), plus `col_seqs` on
+    column_lww tables. A column the batch lacks is a TYPED null — an
+    untyped F.lit(None) writes a null-typed parquet column that the
+    table's declared type cannot read back (code-review r3)."""
+    sel = [F.col(k) for k in key_cols]
+    if column_lww:
+        # patch-table rows carry their own per-column writer seqs; raw
+        # events mark exactly the columns they wrote (mor_patch_row_shape)
+        from .patch import mor_patch_row_shape
+
+        vals, col_seqs_expr, deleted_expr = mor_patch_row_shape(
+            batch_cols, payload_cols, types
+        )
+        content = vals.get("content")
+    else:
+        # op_guard: a 'P' patch event on a row-level table fails the job
+        # before the commit (see patch.py) — it would otherwise be applied
+        # as a full row whose NULLs overwrite good columns
+        from .patch import op_guard
+
+        vals = {
+            c: F.col(c) if c in batch_cols else F.lit(None).cast(types[c])
+            for c in payload_cols
+        }
+        content = F.col("content") if "content" in batch_cols else None
+        deleted_expr = op_guard(F.col("op")) == F.lit("D")
+    sel += [vals[c].alias(c) for c in payload_cols]
+    sel.append(F.col("seq"))
+    sel.append(
+        (
+            F.sha2(content, 256) if content is not None
+            else F.lit(None).cast("string")
+        ).alias("content_sha")
+    )
+    sel.append(deleted_expr.alias("deleted"))
+    if column_lww:
+        sel.append(col_seqs_expr.alias("col_seqs"))
+    return sel
+
+
+def _cow_fold(
+    stored: DataFrame,
+    batch_df: DataFrame,
+    obs: Observation,
+    *,
+    key_cols: list[str],
+    payload_cols: list[str],
+    types: dict,
+    bucket,
+    n_partitions: int,
+    column_lww: bool,
+    overwrite: bool,
+) -> DataFrame:
+    """The copy-on-write merge as ONE fold: the touched buckets' stored
+    rows (`_src`=1) and the batch events in physical row shape (`_src`=0)
+    are unioned, repartitioned once by `_bucket`, and every
+    (_bucket, *key_cols) group resolves to its last writer.
+
+    Row-level tables take `max_by(row, (seq, _src))`: the highest seq
+    wins and an equal seq keeps the stored row, so a redelivered event
+    changes nothing and is not counted as applied. `overwrite=True` ranks
+    the batch side ahead of seq (the repair primitive). column_lww tables
+    resolve per column through `column_lww_fold` with the same ranking.
+    The grouping is clustered by the bucket exchange, so the aggregate
+    adds a local sort only, and its output order (_bucket, *key_cols) is
+    the base-file order the writer asks for.
+
+    `obs` collects, in the write job itself: `rows_in` (batch events, as
+    the sum of per-group batch counts — an Observation on the raw
+    micro-batch frame feeding this union kills the stream execution
+    thread with a StackOverflowError on Spark 4.1), `rows` (rows
+    written), `applied` (groups the batch won) and `skew` (max/mean batch
+    events per key)."""
+    meta_cols = ["seq", "content_sha", "deleted"] + (["col_seqs"] if column_lww else [])
+    stored_rows = stored.select(
+        *key_cols,
+        *[
+            (F.col(c) if c in stored.columns else F.lit(None).cast(types[c])).alias(c)
+            for c in payload_cols
+        ],
+        F.col("seq"),
+        F.col("content_sha"),
+        F.coalesce(F.col("deleted"), F.lit(False)).alias("deleted"),
+        *meta_cols[3:],
+        bucket.alias("_bucket"),
+        F.lit(1).alias("_src"),
+    )
+    batch_rows = batch_df.select(
+        *_row_shape(batch_df.columns, key_cols, payload_cols, types, column_lww),
+        bucket.alias("_bucket"),
+        F.lit(0).alias("_src"),
+    )
+    rows = stored_rows.union(batch_rows).repartition(n_partitions, "_bucket")
+    group = ["_bucket", *key_cols]
+    if column_lww:
+        from .patch import column_lww_fold
+
+        folded = column_lww_fold(rows, group, payload_cols, src_col="_src")
+        applied = F.col("_applied")
+    else:
+        src = F.col("_src")
+        order = (
+            F.struct(src == 0, F.col("seq")) if overwrite
+            else F.struct(F.col("seq"), src)
+        )
+        folded = rows.groupBy(*group).agg(
+            F.max_by(F.struct(*payload_cols, *meta_cols, "_src"), order).alias("_w"),
+            F.sum(F.lit(1) - src).alias("_n"),
+        )
+        applied = F.col("_w._src") == 0
+    n = F.col("_n")
+    folded = folded.observe(
+        obs,
+        F.count(F.lit(1)).alias("rows"),
+        F.sum(applied.cast("long")).alias("applied"),
+        F.sum(n).alias("rows_in"),
+        (F.max(n) / F.avg(F.when(n > 0, n))).alias("skew"),
+    )
+    if column_lww:
+        return folded.drop("_applied", "_n")
+    return folded.select(
+        "_bucket", *key_cols, *[F.col(f"_w.{c}").alias(c) for c in payload_cols + meta_cols]
+    )
+
+
+def _mor_batch(
+    batch_df: DataFrame,
+    key_cols: list[str],
+    payload_cols: list[str],
+    *,
+    name: str,
+    column_lww: bool,
+    dedupe: bool,
+    dedupe_strategy: str,
+    salt_buckets: int | None,
+) -> tuple[DataFrame, Observation]:
+    """The batch a merge-on-read epoch appends, and the Observation of its
+    input-event count `rows_in` (batch_rows must mean INPUT events, not
+    the post-dedupe survivor count; the observation rides the append job).
+
+    In-batch LWW dedupe (C2), optionally salted (C5), is an optional
+    *optimization* here: the snapshot read resolves LWW anyway, so the
+    high-throughput path skips the dedupe shuffle and moves each byte
+    through exactly ONE exchange (the bucket repartition in _merge_mor).
+    The agg dedupes count input events per key as `_n` for free — the
+    input-key-skew signal adaptive salting reads. dedupe_strategy=
+    "prefilter" is the wide-row variant (see lww_dedupe): payload bytes
+    never shuffle for losing rows; its plan scans the source in TWO
+    branches (winner agg + semi join), which would double-count a plain
+    row observation — there the observation is the sum of group counts on
+    the winner aggregate (each input row lands in exactly one group)."""
+    obs_in = Observation(name)
+    if dedupe and dedupe_strategy == "prefilter" and not column_lww:
+        winners = (
+            batch_df.groupBy(*key_cols)
+            .agg(F.max("seq").alias("seq"), F.count(F.lit(1)).alias("_n"))
+            .observe(obs_in, F.sum("_n").cast("long").alias("rows_in"))
+        )
+        survivors = batch_df.join(winners.drop("_n"), [*key_cols, "seq"], "left_semi")
+        return lww_dedupe(survivors, key_cols, "seq", salt_buckets=salt_buckets), obs_in
+    batch_df = batch_df.observe(obs_in, F.count(F.lit(1)).alias("rows_in"))
+    if not dedupe:
+        # raw events append as-is (column_lww rows tag the columns each
+        # event wrote; the read fold resolves)
+        return batch_df, obs_in
+    if column_lww:
+        from .patch import column_lww_dedupe
+
+        return column_lww_dedupe(
+            batch_df, key_cols, [c for c in payload_cols if c in batch_df.columns],
+            salt_buckets=salt_buckets, count_col="_n",
+        ), obs_in
+    return lww_dedupe(
+        batch_df, key_cols, "seq", salt_buckets=salt_buckets, count_col="_n"
+    ), obs_in
 
 
 def _merge_mor(
@@ -678,55 +772,22 @@ def _merge_mor(
     obs_in: Observation,
     publish: bool = True,
 ) -> MergeStats:
-    """Merge-on-read epoch: ONE Spark job — project the deduped batch into
-    the physical row shape (deletes become tombstone rows) and append it as
-    bucket-partitioned delta files. No snapshot read, no join, no rewrite."""
-    key_cols = table.key_cols()
+    """Merge-on-read epoch: ONE Spark job — project the batch into the
+    physical row shape (_row_shape: deletes become tombstone rows) and
+    append it as bucket-partitioned delta files. No snapshot read, no
+    join, no rewrite. A deduped batch's per-key event counts (`_n`) are
+    observed as `key_skew`, the signal adaptive salting reads."""
+    key_cols = meta["key_cols"]
     types = {f.name: f.dataType for f in new_schema.fields}
-    sel = [F.col(k) for k in key_cols]
-    if meta.get("column_lww"):
-        # patch-table delta rows carry their own per-column writer seqs;
-        # raw events (dedupe skipped) keep the one-exchange-per-byte path
-        # and the snapshot read's column_lww_fold does all resolution
-        from .patch import mor_patch_row_shape
-
-        vals, col_seqs_expr, deleted_expr = mor_patch_row_shape(
-            batch.columns, payload_cols, types
-        )
-        sel += [vals[c].alias(c) for c in payload_cols]
-        sel.append(F.col("seq"))
-        sel.append(
-            (
-                F.sha2(vals["content"], 256)
-                if "content" in vals
-                else F.lit(None).cast("string")
-            ).alias("content_sha")
-        )
-        sel.append(deleted_expr.alias("deleted"))
-        sel.append(col_seqs_expr.alias("col_seqs"))
-    else:
-        for c in payload_cols:
-            # a batch missing an evolved column must emit a TYPED null — an
-            # untyped F.lit(None) writes a null-typed parquet column that the
-            # table's declared type cannot read back (code-review r3)
-            sel.append(
-                (F.col(c) if c in batch.columns else F.lit(None).cast(types[c])).alias(c)
-            )
-        sel.append(F.col("seq"))
-        sel.append(
-            (F.sha2(F.col("content"), 256) if "content" in batch.columns else F.lit(None).cast("string")).alias("content_sha")
-        )
-        # op_guard: 'P' patch events on a row-level table fail the job before
-        # the commit (see patch.py) — the MOR path would otherwise append them
-        # as full rows whose NULLs overwrite good columns at read-resolve
-        from .patch import op_guard
-
-        sel.append((op_guard(F.col("op")) == F.lit("D")).alias("deleted"))
-    sel.append(F.col("_bucket"))
-    delta = batch.select(*sel)
-
     obs = Observation(f"mor-{query_id}-{epoch}")
-    delta = delta.observe(obs, F.count(F.lit(1)).alias("rows"))
+    skew = (
+        [(F.max("_n") / F.avg("_n")).alias("skew")] if "_n" in batch.columns else []
+    )
+    delta = batch.observe(obs, F.count(F.lit(1)).alias("rows"), *skew).select(
+        *_row_shape(batch.columns, key_cols, payload_cols, types,
+                    bool(meta.get("column_lww"))),
+        F.col("_bucket"),
+    )
 
     snapshot_id = meta["snapshot_id"] + 1
     # write parallelism ∝ cluster cores (was a hard 64 cap, which
@@ -739,7 +800,7 @@ def _merge_mor(
         snapshot_id=snapshot_id,
         delta=True,
         n_partitions=n_out,
-        key_col=table.key_cols()[0],
+        key_col=key_cols[0],
         max_rows_per_file=meta.get("target_file_rows"),
         stats_cols=meta.get("stats_cols"),
         bloom_cols=meta.get("bloom_cols"),
@@ -747,6 +808,8 @@ def _merge_mor(
     )
     stats.batch_rows = _obs_count(obs_in, "rows_in")
     stats.applied_rows = stats.rows_rewritten = _obs_count(obs, "rows")
+    if skew:
+        stats.key_skew = round(float(_obs_value(obs, "skew")), 2)
     stats.touched = sorted({f["bucket"] for f in new_files})
     stats.touched_buckets = len(stats.touched)
 
@@ -842,7 +905,7 @@ def compact(
 
     `n_buckets` re-buckets the table in the same commit — the growth path
     at scale: a table created with B buckets eventually makes each bucket
-    (the copy-on-write rewrite unit and merge-join grain) too large, so a
+    (the copy-on-write rewrite unit and merge-fold grain) too large, so a
     periodic compact(n_buckets=4*B) re-spreads the keys. Safe because the
     bucket of a key is recomputed from metadata everywhere, never stored
     in row data; one atomic metadata swap flips the whole table over.

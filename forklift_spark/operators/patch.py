@@ -27,16 +27,19 @@ column (engine META column, lakette/table.py PATCH_COL). Without stored
 per-column seqs a LATE patch (below a column's last writer but above
 the row's tombstone floor) could not be dropped per-column.
 
-Applied through BOTH storage modes: on the COW path `column_lww_dedupe`
-replaces the row-level argmax before the join and `patch_cow_select`
-replaces the row-level decision matrix inside it; on the MERGE-ON-READ
-path delta rows carry their own col_seqs (`mor_patch_row_shape` — raw
-events keep the one-exchange-per-byte fast path) and the snapshot read
-resolves dirty groups with `column_lww_fold` instead of the row-level
-argmax (compact() inherits it through snapshot). The write / commit /
-marker machinery is untouched. Associativity makes any split between
-in-batch resolve, delta granularity, and read fold converge, so cow,
-mor and auto epochs mix freely — same as the row-level engine.
+Applied through BOTH storage modes. Batch events become physical rows
+that carry their own col_seqs (`mor_patch_row_shape`). On the
+MERGE-ON-READ path those rows (or their `column_lww_dedupe` in-batch
+resolve) are appended as deltas and the snapshot read resolves dirty
+groups with `column_lww_fold` instead of the row-level argmax (compact()
+inherits it through snapshot). On the COPY-ON-WRITE path the raw event
+rows are unioned with the touched buckets' stored rows and the same
+`column_lww_fold` resolves both sides in one bucket-partitioned
+aggregate (`src_col=` makes equal writer seqs keep the stored row). The
+write / commit / marker machinery is untouched. Associativity makes any
+split between in-batch resolve, delta granularity, and read fold
+converge, so cow, mor and auto epochs mix freely — same as the
+row-level engine.
 """
 
 from __future__ import annotations
@@ -160,80 +163,12 @@ def column_lww_dedupe(
     )
 
 
-def patch_cow_select(
-    batch_cols: list[str],
-    existing_cols: list[str],
-    key_cols: list[str],
-    payload_cols: list[str],
-) -> list[Column]:
-    """The per-column LWW decision matrix for the COW full-outer join
-    (aliases b = column_lww_dedupe output, e = existing snapshot rows) —
-    the patch-table replacement for merge_into's row-level select list.
-    Emits key cols, resolved payload cols, merged `col_seqs`, row `seq`,
-    `content_sha` (recomputed from the RESOLVED content — the per-row
-    invariant holds on the merged value, whichever side each column came
-    from), `deleted`, and the `_applied` accounting column.
-
-    A column evolved in this batch has no e-side value/seq (typed NULL /
-    NULL map entry -> batch wins when it wrote); a column the batch frame
-    lacks entirely has a NULL b-side map entry -> existing wins. Both
-    fall out of the same comparison, no special cases."""
-    b_present = F.col("b.seq").isNotNull()
-    e_present = F.col("e.seq").isNotNull()
-
-    sel: list[Column] = [
-        F.coalesce(F.col(f"b.{k}"), F.col(f"e.{k}")).alias(k) for k in key_cols
-    ]
-    take_row = b_present & (~e_present | (F.col("b.seq") > F.col("e.seq")))
-    take_any = take_row
-    cseqs: list[tuple[str, Column]] = []
-    final_vals: dict[str, Column] = {}
-    for c in payload_cols:
-        bq = F.col("b.col_seqs").getItem(c)
-        eq = (
-            F.col("e.col_seqs").getItem(c)
-            if "col_seqs" in existing_cols
-            else F.lit(None).cast("long")
-        )
-        b_v = F.col(f"b.{c}") if c in batch_cols else F.lit(None)
-        e_v = F.col(f"e.{c}") if c in existing_cols else F.lit(None)
-        take_col = b_present & bq.isNotNull() & (
-            ~e_present | eq.isNull() | (bq > eq)
-        )
-        val = F.when(take_col, b_v).otherwise(e_v)
-        sel.append(val.alias(c))
-        final_vals[c] = val
-        cseqs.append((c, F.greatest(bq, eq)))
-        take_any = take_any | take_col
-    sel.append(
-        F.map_from_arrays(
-            F.array(*[F.lit(c) for c, _ in cseqs]),
-            F.array(*[s for _, s in cseqs]),
-        ).alias("col_seqs")
-    )
-    sel.append(F.greatest(F.col("b.seq"), F.col("e.seq")).alias("seq"))
-    sel.append(
-        (
-            F.sha2(final_vals["content"], 256)
-            if "content" in final_vals
-            else F.col("e.content_sha")
-            if "content_sha" in existing_cols
-            else F.lit(None).cast("string")
-        ).alias("content_sha")
-    )
-    sel.append(
-        F.when(take_row, F.col("b.deleted"))
-        .otherwise(F.coalesce(F.col("e.deleted"), F.lit(False)))
-        .alias("deleted")
-    )
-    sel.append(F.when(take_any, F.lit(1)).otherwise(F.lit(0)).alias("_applied"))
-    return sel
-
-
 def column_lww_fold(
     df: DataFrame,
     key_cols: list[str],
     payload_cols: list[str],
+    *,
+    src_col: str | None = None,
 ) -> DataFrame:
     """Read-time per-column LWW resolve over STORED rows of a column_lww
     table (the merge-on-read dirty-group path; compact() inherits it via
@@ -248,16 +183,21 @@ def column_lww_fold(
     so any split between in-batch resolve, delta granularity, and this
     read fold converges.
 
+    `src_col` is the copy-on-write merge fold (operators/merge.py): an int
+    column, 1 on stored rows and 0 on incoming batch rows, that ranks
+    right after the writer seq in every argmax — an equal seq keeps the
+    stored row, so a redelivered event changes nothing. The output then
+    also carries `_applied` (the batch won the row or some column) and
+    `_n` (batch rows in the group).
+
     One aggregate, map-side combining, one exchange on the key — the same
     shuffle shape as the row-level lww_dedupe read resolve: per-column
     semantics cost zero extra exchanges at read time too."""
     cols = [c for c in payload_cols if c in df.columns]
+    rank = [F.col(src_col).alias("src")] if src_col else []
 
     def packed(c: str) -> Column:
-        fields = [
-            F.col("col_seqs").getItem(c).alias("s"),
-            F.col(c).alias("v"),
-        ]
+        fields = [F.col("col_seqs").getItem(c).alias("s"), *rank, F.col(c).alias("v")]
         if c == "content" and "content_sha" in df.columns:
             fields.append(F.col("content_sha").alias("sha"))
         return F.max(F.struct(*fields)).alias(f"_p_{c}")
@@ -271,14 +211,21 @@ def column_lww_fold(
             F.max(
                 F.struct(
                     F.col("col_seqs").getItem("content").alias("s"),
+                    *rank,
                     F.col("content_sha").alias("sha"),
                 )
             ).alias("_p_sha")
         )
+    row_order = F.struct("seq", src_col) if src_col else F.col("seq")
+    if src_col:
+        aggs += [
+            F.max_by(F.col(src_col), row_order).alias("_row_src"),
+            F.sum(F.lit(1) - F.col(src_col)).alias("_n"),
+        ]
     grouped = df.groupBy(*key_cols).agg(
         *aggs,
         F.max("seq").alias("seq"),
-        F.max_by(F.col("deleted"), F.col("seq")).alias("deleted"),
+        F.max_by(F.col("deleted"), row_order).alias("deleted"),
     )
     sel = [
         *key_cols,
@@ -294,6 +241,13 @@ def column_lww_fold(
         sel.append(F.col("_p_content.sha").alias("content_sha"))
     elif sha_alone:
         sel.append(F.col("_p_sha.sha").alias("content_sha"))
+    if src_col:
+        applied = F.col("_row_src") == 0
+        for c in cols:
+            applied = applied | (
+                (F.col(f"_p_{c}.src") == 0) & F.col(f"_p_{c}.s").isNotNull()
+            )
+        sel += [applied.alias("_applied"), F.col("_n")]
     return grouped.select(*sel)
 
 

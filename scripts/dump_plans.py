@@ -141,6 +141,43 @@ def main() -> None:
         "data, never table size.",
     )
 
+    # COW merge epoch: the frame merge_into hands the data-file writer,
+    # with the writer's own bucket repartition + key sort applied on top
+    from forklift_spark.operators import merge as merge_mod
+
+    written = []
+    real_write = merge_mod._write_datafiles
+
+    def _capture(df, **kw):
+        written.append(
+            df.repartition(kw["n_partitions"], "_bucket")
+            .sortWithinPartitions("_bucket", *kw["sort_cols"])
+        )
+        return real_write(df, **kw)
+
+    # a local batch: `upd` carries the seed's LIMIT, whose own exchange
+    # is not the merge's
+    batch = spark.createDataFrame(
+        upd.withColumn("seq", F.col("seq") + F.lit(1)).collect(), upd.schema
+    )
+    merge_mod._write_datafiles = _capture
+    try:
+        merge_into(spark, t, batch, query_id="plans", epoch=2)
+    finally:
+        merge_mod._write_datafiles = real_write
+    add(
+        "COW merge epoch: the write plan",
+        written[-1],
+        "Expect: ONE exchange — hashpartitioning(_bucket, touched buckets) "
+        "over the Union of the touched buckets' stored rows (_src=1) and the "
+        "batch events in delta-row shape (_src=0, sha2 + op_guard in the "
+        "projection). The LWW fold is a SortAggregate on (_bucket, repo, "
+        "path) with only a local Sort below it; CollectMetrics carries "
+        "rows/applied/rows_in/skew. The writer's repartition and key sort "
+        "are already satisfied and plan away; no join, no "
+        "InMemoryRelation (asserted in tests/test_cow_fold.py).",
+    )
+
     # 9. deterministic stratified sampling (r4): map-only training-data mix
     from forklift_spark.operators import sampling as sp
 

@@ -588,27 +588,41 @@ def test_table_stats_reflects_delta_backlog(spark, tmp_path):
 
 
 def test_adaptive_salting_engages_on_skew(spark, tmp_path):
-    """salt_buckets='auto': one key drawing half the events drives the
-    events-per-key skew signal (counted for free inside the dedupe
-    aggregate) over the threshold, the NEXT epoch's dedupe runs salted,
-    and the final state is sha-exact regardless."""
+    """salt_buckets='auto' on merge-on-read epochs with in-batch dedupe:
+    one key drawing half the events drives the events-per-key skew signal
+    (counted for free inside the dedupe aggregate) over the threshold, the
+    NEXT epoch's dedupe runs salted, and the final state is sha-exact
+    regardless. Copy-on-write epochs never salt (their one fold is
+    partitioned by bucket) but still report the skew."""
     spec = ChangelogSpec(
         n_events=3_000, n_repos=50, paths_per_repo=1, hot_repo_fraction=0.5,
         seed=5, segment_rows=500,
     )
     log = tmp_path / "log"
     generate_changelog(spec, str(log))
+    exp = spark.createDataFrame(expected_final_state(spec))
+
     table = create_entity_table(str(tmp_path / "tbl"), n_buckets=8)
     report = run_ingest(
         spark, str(log), table, str(tmp_path / "ckpt"),
         query_id="asalt", max_files_per_trigger=1, salt_buckets="auto",
+        mode="mor",
     )
     applied = [e for e in report.epochs if not e.skipped]
     assert applied[0].salt_buckets is None          # first epoch: no signal yet
     assert applied[0].key_skew > 8.0                # hot key visible in the agg
     assert all(e.salt_buckets == 16 for e in applied[1:])  # loop engaged
-    exp = spark.createDataFrame(expected_final_state(spec))
     assert verify_state(spark, table, exp)["ok"]
+
+    cow = create_entity_table(str(tmp_path / "cow"), n_buckets=8)
+    report = run_ingest(
+        spark, str(log), cow, str(tmp_path / "ckpt-cow"),
+        query_id="asalt-cow", max_files_per_trigger=1, salt_buckets="auto",
+    )
+    applied = [e for e in report.epochs if not e.skipped]
+    assert all(e.key_skew > 8.0 for e in applied)
+    assert all(e.salt_buckets is None for e in applied)
+    assert verify_state(spark, cow, exp)["ok"]
 
 
 # ------------------------------------------------ everything-on pipeline
