@@ -1415,8 +1415,8 @@ class LaketteTable:
         `columns` restricts the PAYLOAD columns read (key + engine columns
         always ride along; pass [] for keys-and-metadata only). This
         matters beyond ordinary projection pushdown: the merge-on-read LWW
-        resolve packs every selected payload column into one
-        `max_by(struct(...))`, which Catalyst cannot prune INTO — a narrow
+        resolve packs every selected payload column into one argmax
+        struct, which Catalyst cannot prune INTO — a narrow
         query over a wide dirty table would otherwise scan and shuffle the
         full content bodies. Pruning here reaches the parquet scan."""
         if as_of is not None:
@@ -1564,25 +1564,18 @@ class LaketteTable:
         if clean_files:
             parts.append(_read(clean_files))
         if dirty_files:
-            if column_lww:
-                # per-column LWW resolve (operators/patch.py): base rows
-                # and patch delta rows fold column-wise by stored writer
-                # seqs — same single-exchange aggregate shape as the
-                # row-level argmax below
-                from ..operators.patch import column_lww_fold
+            # the engine's one LWW resolver (operators/merge.py): the
+            # row-level argmax, or per-column LWW by stored writer seqs on
+            # column_lww tables — one single-exchange aggregate either way
+            from ..operators.merge import resolve
 
-                payload = [
-                    f.name for f in schema.fields
-                    if f.name not in meta["key_cols"]
-                    and f.name not in META_COL_NAMES
-                ]
-                parts.append(
-                    column_lww_fold(_read(dirty_files), meta["key_cols"], payload)
-                )
-            else:
-                from ..operators.merge import lww_dedupe
-
-                parts.append(lww_dedupe(_read(dirty_files), meta["key_cols"], "seq"))
+            payload = [
+                f.name for f in schema.fields
+                if f.name not in meta["key_cols"] and f.name not in META_COL_NAMES
+            ]
+            parts.append(resolve(
+                _read(dirty_files), meta["key_cols"], payload, column_lww=column_lww
+            ))
         if not parts:
             df = spark.createDataFrame([], schema)
         elif len(parts) == 1:

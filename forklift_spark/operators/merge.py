@@ -1,7 +1,10 @@
 """C2/C3/C4/C5 — the CDC merge core.
 
-  lww_dedupe   in-batch last-writer-wins per key (agg-based argmax, with an
-               optional salted two-phase variant for hot-key skew)
+  resolve      the engine's one last-writer-wins resolver over physical
+               rows (row-level argmax, or per-column LWW on column_lww
+               tables); every LWW step on the data path runs through it
+  lww_dedupe   in-batch LWW per key over any frame (optionally salted
+               into two resolver passes for hot-key skew)
   merge_into   key-partitioned MERGE INTO a lakette table — copy-on-write
                rewrite or merge-on-read append — with cross-batch LWW,
                tombstoned deletes (confluence under any event
@@ -14,16 +17,19 @@ Scale design notes (the 100 TB story):
     touches — the bucket set comes from a tiny key-columns-only count
     over the batch, and file pruning is metadata-only on the driver.
     Write amplification is bounded by touched buckets, not table size.
+  * Events are shaped first, then resolved: every batch event is
+    projected into the physical row shape (_row_shape) before any LWW
+    step, so the merge-on-read in-batch dedupe, the copy-on-write fold
+    and the snapshot read of dirty groups all run the same `resolve`.
   * The copy-on-write merge is ONE fold (_cow_fold): stored rows of the
-    touched buckets and the batch events, in the same physical row shape
-    a merge-on-read append writes, are unioned, repartitioned once by
-    bucket, and resolved per (bucket, key) by the LWW argmax. The
+    touched buckets and the shaped batch events are unioned,
+    repartitioned once by bucket, and resolved per (bucket, key). The
     writer's bucket repartition and key sort are already satisfied, so
     an epoch moves each row through exactly one exchange — no join, no
     cache, no pre-pass beyond the bucket count.
-  * LWW dedupe is `max_by(struct(*), seq)` — one aggregate, cheaper than
-    a window sort, and trivially saltable into two phases when one key
-    dominates an in-batch dedupe.
+  * The row-level resolve is one argmax aggregate over the whole row
+    that combines map-side, cheaper than a window sort. Its output has
+    its input's shape, so salting is two passes of it.
   * Row resolution is Column expressions (sha256 is JVM `sha2`); the one
     Python step on the data path is the data-file writer, a vectorized
     `mapInArrow` task that streams Arrow batches into parquet files.
@@ -77,77 +83,94 @@ def _obs_value(obs: Observation, key: str):
         raise
 
 
+def resolve(
+    rows: DataFrame,
+    group_cols: list[str],
+    payload_cols: list[str],
+    *,
+    column_lww: bool,
+    src_col: str | None = None,
+    overwrite: bool = False,
+) -> DataFrame:
+    """Resolve every `group_cols` group of physical rows — keys, payload,
+    `seq`, `content_sha`, `deleted`, plus `col_seqs` on column_lww
+    tables — to its last writer. The only LWW code on the data path: the
+    merge-on-read in-batch dedupe, the copy-on-write fold and the snapshot
+    read of dirty groups all call it.
+
+    Row-level tables (`column_lww=False`) take the row with the highest
+    `seq` whole: `max_by(struct(row), seq)`, an aggregate that combines
+    map-side before its one exchange (a window argmax would shuffle every
+    row, then sort); `payload_cols` is unused there, the struct carries
+    every non-group column. column_lww tables resolve per column by
+    writer seq (patch.column_lww_fold).
+
+    `src_col` (0 on incoming batch rows, 1 on stored rows) ranks right
+    after the seq, so an equal seq keeps the stored row; `overwrite=True`
+    ranks the batch side ahead of seq (row-level only: the repair
+    primitive). In the output, `src_col` is 0 where the batch won the row
+    (or, on column_lww, any column).
+
+    A per-row event count `_n`, when present, is summed per group. The
+    output has the input's columns, group columns first, so a second pass
+    over it is valid (_dedupe salts that way)."""
+    if column_lww:
+        from .patch import column_lww_fold
+
+        return column_lww_fold(rows, group_cols, payload_cols, src_col=src_col)
+    order = F.col("seq")
+    if src_col:
+        src = F.col(src_col)
+        order = F.struct(src == 0, order) if overwrite else F.struct(order, src)
+    carried = [c for c in rows.columns if c not in group_cols and c != "_n"]
+    count = ["_n"] if "_n" in rows.columns else []
+    return rows.groupBy(*group_cols).agg(
+        F.max_by(F.struct(*carried), order).alias("_w"),
+        *[F.sum(c).alias(c) for c in count],
+    ).select(*group_cols, *[F.col(f"_w.{c}").alias(c) for c in carried], *count)
+
+
+def _dedupe(
+    rows: DataFrame,
+    key_cols: list[str],
+    payload_cols: list[str],
+    *,
+    column_lww: bool,
+    salt_buckets: int | None,
+) -> DataFrame:
+    """In-batch LWW per key. With `salt_buckets=S` it is two resolver
+    passes: first per (key, pmod(xxhash64(seq), S)), then per key — the
+    wide exchange carries key+salt (a hot key spreads over S shards) and
+    the final per-key reduce sees at most S rows per key. Every LWW rule
+    is an associative max, so the result is identical for any S
+    (SURVEY.md §7 hard-point 5)."""
+    if salt_buckets and salt_buckets > 1:
+        salted = rows.withColumn(
+            "_salt", F.pmod(F.xxhash64(F.col("seq")), F.lit(salt_buckets))
+        )
+        rows = resolve(
+            salted, [*key_cols, "_salt"], payload_cols, column_lww=column_lww
+        ).drop("_salt")
+    return resolve(rows, key_cols, payload_cols, column_lww=column_lww)
+
+
 def lww_dedupe(
     df: DataFrame,
     key_cols: list[str],
     order_col: str = "seq",
     salt_buckets: int | None = None,
-    prefilter: bool = False,
-    count_col: str | None = None,
 ) -> DataFrame:
-    """Keep, per key, the row with the maximum `order_col` (last writer wins).
-    `count_col` additionally emits the number of input events per key (free
-    inside the same aggregate) — the input-key-skew signal adaptive salting
-    reads; not supported with prefilter (whose survivor argmax would count
-    only duplicate deliveries of winners, not all events).
-
-    Implemented as an aggregate argmax — `max_by(struct(cols), order)` —
-    which partial-aggregates map-side before the shuffle (a window argmax
-    would shuffle *all* rows, then sort). With `salt_buckets`, a hot key is
-    first reduced within salt shards, then across them: the wide shuffle
-    carries key+salt (balanced), the final per-key reduce sees at most
-    `salt_buckets` rows per key. Correctness: max is associative, so the
-    two-phase result is identical (SURVEY.md §7 hard-point 5).
-
-    `prefilter=True` is the WIDE-ROW strategy ("argmax by reference"): when
-    payload bytes dominate (source-file content), the plain argmax shuffles
-    every row's full payload, and map-side partial aggregation barely
-    reduces a stream whose keys are spread across tasks. Instead:
-      1. aggregate only (key, max order) — a shuffle of keys+longs, with
-         the payload column PRUNED at the parquet scan;
-      2. left-semi join the input against that winner set on
-         (key, order) — AQE broadcasts the winner set when it is small,
-         so surviving full rows are filtered map-side, never shuffled;
-      3. run the plain argmax on the survivors (tiny) to collapse exact
-         duplicate deliveries of the same (key, order) row.
-    Identical result; payload bytes cross an exchange only for rows that
-    actually win. Equal-`order_col` conflicting payloads resolve
-    arbitrarily in BOTH strategies (max_by tie), so results agree whenever
-    the order key is a total order per key — the engine's contract.
-    """
-    if prefilter:
-        if count_col:
-            raise ValueError(
-                "count_col is not supported with prefilter: the survivor "
-                "argmax would count only duplicate deliveries of winners, "
-                "not all input events (the skew signal would be wrong)"
-            )
-        winners = df.groupBy(*key_cols).agg(F.max(order_col).alias(order_col))
-        survivors = df.join(winners, [*key_cols, order_col], "left_semi")
-        return lww_dedupe(survivors, key_cols, order_col, salt_buckets=salt_buckets)
-    payload = [c for c in df.columns if c not in key_cols]
-    packed = F.max_by(F.struct(*[F.col(c) for c in payload]), F.col(order_col))
-    extra = [F.count(F.lit(1)).alias(count_col)] if count_col else []
-    if salt_buckets and salt_buckets > 1:
-        salted = df.withColumn(
-            "_salt", F.pmod(F.xxhash64(F.col(order_col)), F.lit(salt_buckets))
-        )
-        phase1 = salted.groupBy(*key_cols, "_salt").agg(packed.alias("_p"), *extra)
-        phase2 = (
-            phase1.groupBy(*key_cols)
-            .agg(
-                F.max_by(F.col("_p"), F.col(f"_p.{order_col}")).alias("_p"),
-                *([F.sum(count_col).alias(count_col)] if count_col else []),
-            )
-        )
-        out = phase2
-    else:
-        out = df.groupBy(*key_cols).agg(packed.alias("_p"), *extra)
-    return out.select(
-        *key_cols,
-        *[F.col(f"_p.{c}").alias(c) for c in payload],
-        *([F.col(count_col)] if count_col else []),
-    )
+    """Keep, per key, the row with the maximum `order_col` (last writer
+    wins) — the row-level `resolve` over any frame, optionally salted
+    (`_dedupe`). Equal `order_col` values resolve arbitrarily (an
+    argmax tie); the engine's contract is a total order per key."""
+    if order_col != "seq":
+        # the resolver ranks by `seq`; another commit-order column stands in
+        return lww_dedupe(
+            df.withColumnRenamed(order_col, "seq"), key_cols,
+            salt_buckets=salt_buckets,
+        ).withColumnRenamed("seq", order_col)
+    return _dedupe(df, key_cols, [], column_lww=False, salt_buckets=salt_buckets)
 
 
 @dataclass
@@ -262,7 +285,6 @@ def merge_into(
     auto_cow_factor: float = 4.0,
     auto_prev: "MergeStats | None" = None,
     dedupe_in_batch: bool = True,
-    dedupe_strategy: str = "agg",
     overwrite: bool = False,
     publish: bool = True,
 ) -> MergeStats:
@@ -313,12 +335,14 @@ def merge_into(
     do not apply (recorded `salt_buckets` is None): the fold already
     resolves duplicates, and its exchange is by bucket, where a hot key
     costs one partition at most; `key_skew` is still recorded.
-    mode="mor" (merge-on-read): append the batch — deduped in-batch by
-    default (`dedupe_in_batch`, salted with `salt_buckets`) — as delta
-    files in ONE Spark job; the per-key argmax is deferred to snapshot reads (and
-    folded away by compact()). Identical final semantics because every row
-    carries `seq` and LWW-max is associative — this is the
-    Iceberg-v2-style high-throughput ingest path.
+    mode="mor" (merge-on-read): project the batch events into the physical
+    row shape and append them as delta files in ONE Spark job — resolved
+    in-batch by default (`dedupe_in_batch`: the same LWW resolver, salted
+    into two passes with `salt_buckets`); the final per-key resolve is
+    deferred to snapshot reads (and folded away by compact()). Identical
+    final semantics because every row carries `seq` and LWW-max is
+    associative — this is the Iceberg-v2-style high-throughput ingest
+    path.
     mode="auto": decide PER EPOCH before any heavy work, against the
     maintained per-bucket counters (zero manifest loads): merge-on-read
     when the touched key groups hold more than `auto_cow_factor` x the
@@ -400,12 +424,11 @@ def merge_into(
     # column_lww=True resolve merges PER COLUMN ('P' events write only
     # their non-NULL columns), in every mode
     column_lww = bool(meta.get("column_lww"))
-    if column_lww:
-        from .patch import ensure_patch_mode
-
-        mode = ensure_patch_mode(
-            meta, mode=mode, overwrite=overwrite,
-            dedupe_strategy=dedupe_strategy,
+    if column_lww and overwrite:
+        raise ValueError(
+            "overwrite=True is not supported on a column_lww table: "
+            "overwrite is the row-level repair primitive (replicate "
+            "resync); per-column state has no force-this-row analogue yet"
         )
 
     # --- schema evolution (C4): additive ALTER folded into this commit
@@ -463,16 +486,16 @@ def merge_into(
 
     if mode == "mor":
         batch, obs_in = _mor_batch(
-            batch_df, key_cols, payload_cols, name=f"in-{query_id}-{epoch}",
-            column_lww=column_lww, dedupe=dedupe_in_batch,
-            dedupe_strategy=dedupe_strategy, salt_buckets=salt_buckets,
+            batch_df, key_cols, payload_cols, types,
+            name=f"in-{query_id}-{epoch}", column_lww=column_lww,
+            dedupe=dedupe_in_batch, salt_buckets=salt_buckets,
         )
         stats.mode_used = "mor"
         stats = _merge_mor(
             table, batch.withColumn("_bucket", bucket), stats,
-            query_id=query_id, epoch=epoch, payload_cols=payload_cols,
-            new_schema=new_schema, src_offsets=src_offsets, meta=meta,
-            obs_in=obs_in, publish=publish,
+            query_id=query_id, epoch=epoch, new_schema=new_schema,
+            src_offsets=src_offsets, meta=meta, obs_in=obs_in,
+            publish=publish,
         )
         stats.wall_sec = round(time.monotonic() - t_start, 3)
         _write_metrics(table, query_id, stats)
@@ -579,10 +602,11 @@ def _row_shape(
     types: dict,
     column_lww: bool,
 ) -> list:
-    """The physical row a batch event (or in-batch-deduped row) is stored
-    as: key cols, payload cols, `seq`, `content_sha` = sha2(content),
+    """The physical row a raw batch event is stored as, and resolved as:
+    key cols, payload cols, `seq`, `content_sha` = sha2(content),
     `deleted` (deletes become tombstone rows), plus `col_seqs` on
-    column_lww tables. A column the batch lacks is a TYPED null — an
+    column_lww tables. Every event is shaped before any LWW step, so
+    op_guard sees each one. A column the batch lacks is a TYPED null — an
     untyped F.lit(None) writes a null-typed parquet column that the
     table's declared type cannot read back (code-review r3)."""
     sel = [F.col(k) for k in key_cols]
@@ -637,19 +661,16 @@ def _cow_fold(
     """The copy-on-write merge as ONE fold: the touched buckets' stored
     rows (`_src`=1) and the batch events in physical row shape (`_src`=0)
     are unioned, repartitioned once by `_bucket`, and every
-    (_bucket, *key_cols) group resolves to its last writer.
-
-    Row-level tables take `max_by(row, (seq, _src))`: the highest seq
-    wins and an equal seq keeps the stored row, so a redelivered event
-    changes nothing and is not counted as applied. `overwrite=True` ranks
-    the batch side ahead of seq (the repair primitive). column_lww tables
-    resolve per column through `column_lww_fold` with the same ranking.
-    The grouping is clustered by the bucket exchange, so the aggregate
-    adds a local sort only, and its output order (_bucket, *key_cols) is
-    the base-file order the writer asks for.
+    (_bucket, *key_cols) group resolves to its last writer (`resolve`
+    with `src_col="_src"`): an equal seq keeps the stored row, so a
+    redelivered event changes nothing and is not counted as applied;
+    `overwrite=True` ranks the batch side ahead of seq (the repair
+    primitive). The grouping is clustered by the bucket exchange, so the
+    aggregate adds a local sort only, and its output order
+    (_bucket, *key_cols) is the base-file order the writer asks for.
 
     `obs` collects, in the write job itself: `rows_in` (batch events, as
-    the sum of per-group batch counts — an Observation on the raw
+    the sum of per-group batch counts `_n` — an Observation on the raw
     micro-batch frame feeding this union kills the stream execution
     thread with a StackOverflowError on Spark 4.1), `rows` (rows
     written), `applied` (groups the batch won) and `skew` (max/mean batch
@@ -667,94 +688,61 @@ def _cow_fold(
         *meta_cols[3:],
         bucket.alias("_bucket"),
         F.lit(1).alias("_src"),
+        F.lit(0).alias("_n"),
     )
     batch_rows = batch_df.select(
         *_row_shape(batch_df.columns, key_cols, payload_cols, types, column_lww),
         bucket.alias("_bucket"),
         F.lit(0).alias("_src"),
+        F.lit(1).alias("_n"),
     )
     rows = stored_rows.union(batch_rows).repartition(n_partitions, "_bucket")
-    group = ["_bucket", *key_cols]
-    if column_lww:
-        from .patch import column_lww_fold
-
-        folded = column_lww_fold(rows, group, payload_cols, src_col="_src")
-        applied = F.col("_applied")
-    else:
-        src = F.col("_src")
-        order = (
-            F.struct(src == 0, F.col("seq")) if overwrite
-            else F.struct(F.col("seq"), src)
-        )
-        folded = rows.groupBy(*group).agg(
-            F.max_by(F.struct(*payload_cols, *meta_cols, "_src"), order).alias("_w"),
-            F.sum(F.lit(1) - src).alias("_n"),
-        )
-        applied = F.col("_w._src") == 0
+    folded = resolve(
+        rows, ["_bucket", *key_cols], payload_cols, column_lww=column_lww,
+        src_col="_src", overwrite=overwrite,
+    )
     n = F.col("_n")
-    folded = folded.observe(
+    return folded.observe(
         obs,
         F.count(F.lit(1)).alias("rows"),
-        F.sum(applied.cast("long")).alias("applied"),
+        F.sum((F.col("_src") == 0).cast("long")).alias("applied"),
         F.sum(n).alias("rows_in"),
         (F.max(n) / F.avg(F.when(n > 0, n))).alias("skew"),
-    )
-    if column_lww:
-        return folded.drop("_applied", "_n")
-    return folded.select(
-        "_bucket", *key_cols, *[F.col(f"_w.{c}").alias(c) for c in payload_cols + meta_cols]
-    )
+    ).select("_bucket", *key_cols, *payload_cols, *meta_cols)
 
 
 def _mor_batch(
     batch_df: DataFrame,
     key_cols: list[str],
     payload_cols: list[str],
+    types: dict,
     *,
     name: str,
     column_lww: bool,
     dedupe: bool,
-    dedupe_strategy: str,
     salt_buckets: int | None,
 ) -> tuple[DataFrame, Observation]:
-    """The batch a merge-on-read epoch appends, and the Observation of its
+    """The rows a merge-on-read epoch appends, and the Observation of its
     input-event count `rows_in` (batch_rows must mean INPUT events, not
     the post-dedupe survivor count; the observation rides the append job).
 
-    In-batch LWW dedupe (C2), optionally salted (C5), is an optional
-    *optimization* here: the snapshot read resolves LWW anyway, so the
-    high-throughput path skips the dedupe shuffle and moves each byte
-    through exactly ONE exchange (the bucket repartition in _merge_mor).
-    The agg dedupes count input events per key as `_n` for free — the
-    input-key-skew signal adaptive salting reads. dedupe_strategy=
-    "prefilter" is the wide-row variant (see lww_dedupe): payload bytes
-    never shuffle for losing rows; its plan scans the source in TWO
-    branches (winner agg + semi join), which would double-count a plain
-    row observation — there the observation is the sum of group counts on
-    the winner aggregate (each input row lands in exactly one group)."""
+    Every event is projected into the physical row shape first
+    (_row_shape), then optionally resolved in-batch (C2) by the shared
+    LWW resolver, salted into two passes with `salt_buckets` (C5). The
+    dedupe is an *optimization*: the snapshot read resolves LWW anyway,
+    so the high-throughput path skips the dedupe shuffle and moves each
+    byte through exactly ONE exchange (the bucket repartition in
+    _merge_mor). The dedupe sums a per-event count into `_n`, the input
+    events per key — the skew signal adaptive salting reads."""
     obs_in = Observation(name)
-    if dedupe and dedupe_strategy == "prefilter" and not column_lww:
-        winners = (
-            batch_df.groupBy(*key_cols)
-            .agg(F.max("seq").alias("seq"), F.count(F.lit(1)).alias("_n"))
-            .observe(obs_in, F.sum("_n").cast("long").alias("rows_in"))
-        )
-        survivors = batch_df.join(winners.drop("_n"), [*key_cols, "seq"], "left_semi")
-        return lww_dedupe(survivors, key_cols, "seq", salt_buckets=salt_buckets), obs_in
-    batch_df = batch_df.observe(obs_in, F.count(F.lit(1)).alias("rows_in"))
+    rows = batch_df.observe(obs_in, F.count(F.lit(1)).alias("rows_in")).select(
+        *_row_shape(batch_df.columns, key_cols, payload_cols, types, column_lww)
+    )
     if not dedupe:
-        # raw events append as-is (column_lww rows tag the columns each
-        # event wrote; the read fold resolves)
-        return batch_df, obs_in
-    if column_lww:
-        from .patch import column_lww_dedupe
-
-        return column_lww_dedupe(
-            batch_df, key_cols, [c for c in payload_cols if c in batch_df.columns],
-            salt_buckets=salt_buckets, count_col="_n",
-        ), obs_in
-    return lww_dedupe(
-        batch_df, key_cols, "seq", salt_buckets=salt_buckets, count_col="_n"
+        return rows, obs_in
+    return _dedupe(
+        rows.withColumn("_n", F.lit(1)), key_cols, payload_cols,
+        column_lww=column_lww, salt_buckets=salt_buckets,
     ), obs_in
 
 
@@ -765,29 +753,23 @@ def _merge_mor(
     *,
     query_id: str,
     epoch: int,
-    payload_cols: list[str],
     new_schema: T.StructType,
     src_offsets: tuple[int, int] | None,
     meta: dict,
     obs_in: Observation,
     publish: bool = True,
 ) -> MergeStats:
-    """Merge-on-read epoch: ONE Spark job — project the batch into the
-    physical row shape (_row_shape: deletes become tombstone rows) and
-    append it as bucket-partitioned delta files. No snapshot read, no
-    join, no rewrite. A deduped batch's per-key event counts (`_n`) are
-    observed as `key_skew`, the signal adaptive salting reads."""
+    """Merge-on-read epoch: ONE Spark job — append the batch's physical
+    rows (_mor_batch) as bucket-partitioned delta files. No snapshot
+    read, no join, no rewrite. A deduped batch's per-key event counts
+    (`_n`) are observed as `key_skew`, the signal adaptive salting
+    reads."""
     key_cols = meta["key_cols"]
-    types = {f.name: f.dataType for f in new_schema.fields}
     obs = Observation(f"mor-{query_id}-{epoch}")
     skew = (
         [(F.max("_n") / F.avg("_n")).alias("skew")] if "_n" in batch.columns else []
     )
-    delta = batch.observe(obs, F.count(F.lit(1)).alias("rows"), *skew).select(
-        *_row_shape(batch.columns, key_cols, payload_cols, types,
-                    bool(meta.get("column_lww"))),
-        F.col("_bucket"),
-    )
+    delta = batch.observe(obs, F.count(F.lit(1)).alias("rows"), *skew).drop("_n")
 
     snapshot_id = meta["snapshot_id"] + 1
     # write parallelism ∝ cluster cores (was a hard 64 cap, which

@@ -110,13 +110,12 @@ def replay_batch(
     salt_buckets: int | None = None,
     schema: T.StructType | None = None,
     mode: str = "cow",
-    dedupe_strategy: str = "agg",
 ) -> MergeStats:
     """M2: read the whole change log as one batch and merge it."""
     df = spark.read.schema(schema or CHANGELOG_SCHEMA).parquet(f"{log_dir}/seg-*.parquet")
     return merge_into(
         spark, table, df, query_id=query_id, epoch=epoch, salt_buckets=salt_buckets,
-        mode=mode, dedupe_strategy=dedupe_strategy,
+        mode=mode,
     )
 
 
@@ -210,7 +209,6 @@ def run_ingest(
     mode: str = "cow",
     source: str = "file",
     dedupe_in_batch: bool = True,
-    dedupe_strategy: str = "agg",
     compact_every: int | None = None,
     drop_dup_within_watermark: str | None = None,
     vacuum_every: int | None = None,
@@ -244,12 +242,13 @@ def run_ingest(
     for duplicates arriving outside the watermark.
 
     salt_buckets="auto" turns on ADAPTIVE skew salting for merge-on-read
-    epochs with in-batch dedupe: the dedupe aggregate counts input events
-    per key for free, the engine records max/mean as `key_skew`, and the
-    two-phase salted dedupe engages for the NEXT epoch when skew crosses
-    8x, releasing below 3x. No pre-pass — the signal rides the epoch's own
-    aggregate — and at most one epoch of lag, which correctness never
-    depends on (the salted argmax is identical for any salt count).
+    epochs with in-batch dedupe: the dedupe's LWW resolver sums input
+    events per key for free, the engine records max/mean as `key_skew`,
+    and the dedupe splits into two salted resolver passes for the NEXT
+    epoch when skew crosses 8x, releasing below 3x. No pre-pass — the
+    signal rides the epoch's own aggregate — and at most one epoch of
+    lag, which correctness never depends on (the two-pass resolve is
+    identical for any salt count).
     Copy-on-write epochs never salt (their one fold is partitioned by
     bucket; merge_into records salt_buckets=None) but still report
     `key_skew`, so a mode="auto" loop keeps its signal across modes.
@@ -299,15 +298,6 @@ def run_ingest(
     quarantine write — zero extra jobs) land in `IngestReport.dq`."""
     report = IngestReport()
     adaptive_salt = salt_buckets == "auto"
-    if adaptive_salt and dedupe_strategy == "prefilter":
-        # the skew signal rides the agg-dedupe's free per-key count; the
-        # prefilter strategy has no such count, so 'auto' would silently
-        # never engage (code-review r3) — fail loudly instead
-        raise ValueError(
-            "salt_buckets='auto' requires dedupe_strategy='agg': the "
-            "events-per-key skew signal rides the agg dedupe; pass an "
-            "explicit salt_buckets int with prefilter"
-        )
     current_salt: int | None = None if adaptive_salt else salt_buckets  # type: ignore[assignment]
 
     dead_letter_dir: str | None = None
@@ -392,7 +382,6 @@ def run_ingest(
             mode=mode,
             auto_prev=prev,
             dedupe_in_batch=dedupe_in_batch,
-            dedupe_strategy=dedupe_strategy,
         )
         report.epochs.append(stats)
         if adaptive_salt and not stats.skipped and stats.key_skew:

@@ -43,7 +43,6 @@ class Route:
     mapping: MappingSpec | None = None  # full output envelope (op/seq/keys + payload)
     mode: str = "mor"
     salt_buckets: int | None = None
-    dedupe_strategy: str = "agg"
 
 
 @dataclass
@@ -148,7 +147,6 @@ def merge_routes(
                 epoch=epoch,
                 mode=r.mode,
                 salt_buckets=r.salt_buckets,
-                dedupe_strategy=r.dedupe_strategy,
                 src_offsets=src_offsets,
                 publish=not atomic,
             )

@@ -40,7 +40,6 @@ def make_pyfiles_zip() -> str:
 
 def spark_submit(cores: int, log_dir: str, workdir: str, n_events: int, mode: str,
                  epochs: int, zip_path: str, verify: str, batch_dedupe: bool,
-                 dedupe_strategy: str = "agg",
                  expected_dir: str | None = None,
                  no_compact: bool = False) -> dict:
     spark_submit_bin = shutil.which("spark-submit") or os.path.join(
@@ -64,7 +63,6 @@ def spark_submit(cores: int, log_dir: str, workdir: str, n_events: int, mode: st
         # and running a 24M-row check on the 1-core leg's JVM just burns
         # 15+ min of wall per trial)
         "--verify", "skip" if expected_dir else verify,
-        "--dedupe-strategy", dedupe_strategy,
     ]
     if not batch_dedupe:
         cmd.append("--no-batch-dedupe")
@@ -236,7 +234,6 @@ def main() -> None:
                          "on the same basis (used by the r5 addendum runs)")
     ap.add_argument("--batch-dedupe", action="store_true",
                     help="keep the in-batch dedupe shuffle (default: MOR fast path skips it)")
-    ap.add_argument("--dedupe-strategy", default="agg", choices=["agg", "prefilter"])
     ap.add_argument("--out", default=os.path.join("BENCH", "BASELINE.md"),
                     help="report path relative to the repo root")
     args = ap.parse_args()
@@ -279,7 +276,6 @@ def main() -> None:
             run_dir = os.path.join(args.workdir, f"run-{cores}-t{t}")
             run = spark_submit(cores, log_dir, run_dir, args.n_events, args.mode,
                                args.epochs, zip_path, args.verify, args.batch_dedupe,
-                               dedupe_strategy=args.dedupe_strategy,
                                expected_dir=expected_dir,
                                no_compact=args.no_compact)
             if expected_dir:

@@ -87,19 +87,9 @@ def main() -> None:
         "rank filter pushed via Limit-like pruning where possible.",
     )
 
-    # 6. argmax-by-reference dedupe (wide-payload strategy)
     docs = spark.read.parquet(f"{sf}/documents.parquet").selectExpr(
         "source as repo", "cast(doc_id as string) as path",
         "doc_id as seq", "text as content"
-    )
-    add(
-        "lww_dedupe prefilter (argmax by reference, wide-payload strategy)",
-        lww_dedupe(docs, ["repo", "path"], "seq", prefilter=True),
-        "Expect: winner aggregate scans ONLY (repo, path, seq) — ReadSchema "
-        "pruned, no payload; LEFT SEMI join is a BroadcastHashJoin under "
-        "AQE, so losing rows' payload never crosses an exchange; final tiny "
-        "argmax collapses duplicate deliveries. Measured trade-off in "
-        "BENCH/DEDUPE_STRATEGY.md (default stays `agg` at narrow payloads).",
     )
 
     # 7. six-table TPC-H Q5 shape (join order + broadcast dims)
@@ -247,18 +237,24 @@ def main() -> None:
     )
 
     # 13. per-column LWW patch dedupe (r5): partial updates, same shuffle
-    from forklift_spark.operators.patch import column_lww_dedupe
+    from forklift_spark.operators.merge import _row_shape, resolve
 
+    patch_cols = ["commit", "lang", "content"]
+    shaped = ev.select(*_row_shape(
+        ev.columns, ["repo", "path"], patch_cols,
+        {f.name: f.dataType for f in ev.schema.fields}, column_lww=True,
+    ))
     add(
         "Partial-update per-column LWW dedupe (r5)",
-        column_lww_dedupe(ev, ["repo", "path"], ["commit", "lang", "content"]),
-        "Expect: per-column struct argmax + row-level argmax fused into ONE "
-        "aggregate — partial aggregation before the exchange (map-side "
-        "combine), ONE shuffle keyed (repo, path), the col_seqs "
-        "map_from_arrays projection in codegen after it. Identical exchange "
-        "shape and byte volume to the row-level lww_dedupe: patch semantics "
-        "cost zero extra shuffles; the per-column state is a few longs per "
-        "row in the written files.",
+        resolve(shaped, ["repo", "path"], patch_cols, column_lww=True),
+        "Expect: the shared LWW resolver over patch events shaped into "
+        "physical rows (_row_shape: sha2 and the per-event col_seqs map in "
+        "codegen before the exchange) — per-column struct argmax + "
+        "row-level argmax fused into ONE aggregate, partial aggregation "
+        "before the exchange (map-side combine), ONE shuffle keyed (repo, "
+        "path). Identical exchange shape to the row-level lww_dedupe: patch "
+        "semantics cost zero extra shuffles; the per-column state is a few "
+        "longs per row in the written files.",
     )
 
     # 14. data-quality expectations split (r5): two filters, one projection

@@ -72,9 +72,6 @@ def main() -> None:
     ap.add_argument("--seed", type=int, default=42)
     ap.add_argument("--no-batch-dedupe", action="store_true",
                     help="MOR fast path: skip the in-batch dedupe shuffle")
-    ap.add_argument("--dedupe-strategy", default="agg", choices=["agg", "prefilter"],
-                    help="prefilter = argmax-by-reference: payload bytes never "
-                         "shuffle for losing rows (wide-row COW optimization)")
     ap.add_argument("--no-compact", action="store_true",
                     help="skip the post-replay fold-compact: the SUSTAINED "
                          "metric (the scored basis) is computed from the "
@@ -130,7 +127,6 @@ def main() -> None:
         max_files_per_trigger=files_per_trigger,
         mode=args.mode,
         dedupe_in_batch=not args.no_batch_dedupe,
-        dedupe_strategy=args.dedupe_strategy,
     )
     if args.mode == "mor" and not args.no_compact:
         compact(spark, table)
@@ -144,7 +140,6 @@ def main() -> None:
         "cores": args.cores,
         "mode": args.mode,
         "batch_dedupe": not args.no_batch_dedupe,
-        "dedupe_strategy": args.dedupe_strategy,
         "events": args.n_events,
         "replay_wall_sec": round(wall, 3),
         "events_per_sec": round(args.n_events / wall, 1),

@@ -17,6 +17,12 @@ def spark():
         cores=int(os.environ.get("SPARK_TEST_CORES", "4")),
         shuffle_partitions=8,
         driver_memory="4g",
+        # Python workers run under tests/pyworker_daemon.py: pyspark's own
+        # daemon without the per-task re-read of pyspark.zip's directory
+        extra_conf={
+            "spark.python.daemon.module": "pyworker_daemon",
+            "spark.executorEnv.PYTHONPATH": os.path.dirname(os.path.abspath(__file__)),
+        },
     )
     yield s
 

@@ -1,7 +1,8 @@
 """Copy-on-write merge as one bucket-partitioned LWW fold (operators/merge.py
 _cow_fold): the write plan's shape, and the fold's edge cases that no
 other test pins down — equal-seq redelivery, overwrite of a higher stored
-seq, and input-event accounting in a streaming drain."""
+seq, and input-event accounting in a streaming drain. Also the write plan
+of the merge-on-read in-batch dedupe, which runs the same resolver."""
 
 import pytest
 
@@ -126,3 +127,33 @@ def test_streaming_cow_drain_counts_every_delivered_event(spark, tmp_path):
     assert sum(e.batch_rows for e in applied) == gen.n_delivered
     exp = spark.createDataFrame(expected_final_state(spec))
     assert verify_state(spark, table, exp)["ok"]
+
+
+def _mor_dedupe_write_exchanges(spark, path, captured_writes, *, column_lww, salt_buckets):
+    table = create_entity_table(path, n_buckets=4, column_lww=column_lww)
+    op = "P" if column_lww else "U"
+    events = [("I", s, "r", f"p{s % 7}", "c", "py", f"v{s}", None, 1) for s in range(1, 30)]
+    events += [(op, 100 + s, "r", f"p{s}", None, "js", None, None, 1) for s in range(3)]
+    merge_into(
+        spark, table, _rows(spark, events), query_id="q", epoch=0, mode="mor",
+        salt_buckets=salt_buckets,
+    )
+    df, kw = captured_writes[-1]
+    assert kw["delta"] is True
+    # the writer repartitions by _bucket on top of the frame it is handed
+    written = df.repartition(kw["n_partitions"], "_bucket")
+    return count_exchanges(written), executed_plan(written)
+
+
+@pytest.mark.parametrize("column_lww", [False, True])
+def test_mor_dedupe_write_plan_exchanges(spark, tmp_path, captured_writes, column_lww):
+    n, plan = _mor_dedupe_write_exchanges(
+        spark, str(tmp_path / "plain"), captured_writes,
+        column_lww=column_lww, salt_buckets=None,
+    )
+    assert n == 2, plan  # the dedupe aggregate + the bucket repartition
+    n, plan = _mor_dedupe_write_exchanges(
+        spark, str(tmp_path / "salted"), captured_writes,
+        column_lww=column_lww, salt_buckets=16,
+    )
+    assert n <= 3, plan  # two salted resolver passes + the bucket repartition

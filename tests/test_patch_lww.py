@@ -15,8 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from forklift_spark.lakette.table import LaketteTable
-from forklift_spark.operators.merge import merge_into
-from forklift_spark.operators.patch import column_lww_dedupe
+from forklift_spark.operators.merge import _row_shape, merge_into, resolve
 from forklift_spark.streaming.ingest import create_entity_table
 
 _DDL = (
@@ -227,13 +226,10 @@ def test_schema_evolution_with_patches(spark, tmp_path):
     ] == 123  # seq 15 < 20: late for that column
 
 
-def test_guards_prefilter_overwrite(spark, tmp_path):
+def test_guards_overwrite_and_auto(spark, tmp_path):
     table = create_entity_table(str(tmp_path / "t"), n_buckets=4, column_lww=True)
     rows = [_ev("I", 1, "r0", "a", "c", "py", "x")]
     df = spark.createDataFrame(rows, _DDL)
-    with pytest.raises(ValueError, match="prefilter"):
-        merge_into(spark, table, df, query_id="q", epoch=0,
-                   dedupe_strategy="prefilter")
     with pytest.raises(ValueError, match="overwrite"):
         merge_into(spark, table, df, query_id="q", epoch=0, overwrite=True)
     # auto picks a mode per epoch and applies (first epoch: exact decision)
@@ -247,6 +243,22 @@ def test_patch_event_on_row_level_table_fails_loudly(spark, tmp_path):
     table = create_entity_table(str(tmp_path / "t"), n_buckets=4)
     v0 = table.current_metadata()["version"]
     rows = [_ev("P", 5, "r0", "a", lang="js")]
+    df = spark.createDataFrame(rows, _DDL)
+    with pytest.raises(Exception, match="column_lww"):
+        merge_into(spark, table, df, query_id="q", epoch=0)
+    with pytest.raises(Exception, match="column_lww"):
+        merge_into(spark, table, df, query_id="q2", epoch=0, mode="mor")
+    assert table.current_metadata()["version"] == v0  # nothing committed
+
+
+def test_losing_patch_event_on_row_level_table_fails_in_both_modes(spark, tmp_path):
+    """A 'P' that loses in-batch LWW to a newer full row is still a patch
+    event on a row-level table: events are shaped (op_guard) before any
+    resolve, so whether the batch is rejected does not depend on the
+    storage mode (mode="auto" picks one per epoch)."""
+    table = create_entity_table(str(tmp_path / "t"), n_buckets=4)
+    v0 = table.current_metadata()["version"]
+    rows = [_ev("U", 5, "r0", "a", "c1", "py", "full"), _ev("P", 3, "r0", "a", lang="js")]
     df = spark.createDataFrame(rows, _DDL)
     with pytest.raises(Exception, match="column_lww"):
         merge_into(spark, table, df, query_id="q", epoch=0)
@@ -289,9 +301,10 @@ def test_patch_streaming_replay(spark, tmp_path):
     assert _sha_ok(spark, table)
 
 
-def test_column_lww_dedupe_unit(spark):
-    """The in-batch resolve alone: per-column writer seqs, NULL for a
-    column the batch never wrote, deletes write every column."""
+def test_column_lww_resolve_unit(spark):
+    """The in-batch resolve alone, over events shaped into physical rows:
+    per-column writer seqs, NULL for a column the batch never wrote,
+    deletes write every column."""
     df = spark.createDataFrame(
         [
             _ev("I", 1, "r", "k", "c1", "py", "b1"),
@@ -301,9 +314,11 @@ def test_column_lww_dedupe_unit(spark):
         ],
         _DDL,
     ).drop("event_ts", "schema_v")
+    types = {f.name: f.dataType for f in df.schema.fields}
+    shaped = df.select(*_row_shape(df.columns, ["repo", "path"], PAYLOAD, types, True))
     out = {
         (r.repo, r.path): r
-        for r in column_lww_dedupe(df, ["repo", "path"], PAYLOAD).collect()
+        for r in resolve(shaped, ["repo", "path"], PAYLOAD, column_lww=True).collect()
     }
     k = out[("r", "k")]
     assert (k.commit, k.lang, k.content) == ("c1", "js", "b2")
@@ -311,6 +326,37 @@ def test_column_lww_dedupe_unit(spark):
     assert k.seq == 3 and k.deleted is False
     k2 = out[("r", "k2")]
     assert k2.col_seqs["lang"] == 1 and k2.col_seqs["commit"] is None
+
+
+@pytest.mark.parametrize("column_lww", [False, True])
+def test_resolve_output_is_a_valid_resolve_input(spark, column_lww):
+    """The resolver's output has its input's shape, so resolving it again
+    changes nothing — values, seqs, tombstones, content_sha and the summed
+    per-row event counts `_n` — and a split into two passes (the salted
+    dedupe) equals one pass."""
+    events = _random_log(23, n_events=120, n_keys=12)
+    if not column_lww:
+        events = [e for e in events if e[0] != "P"]
+    df = spark.createDataFrame(events, _DDL).drop("event_ts", "schema_v")
+    types = {f.name: f.dataType for f in df.schema.fields}
+    keys = ["repo", "path"]
+    shaped = df.select(
+        *_row_shape(df.columns, keys, PAYLOAD, types, column_lww), F.lit(1).alias("_n")
+    )
+
+    def _rows(frame):
+        return sorted(tuple(r) for r in frame.select(*shaped.columns).collect())
+
+    once = resolve(shaped, keys, PAYLOAD, column_lww=column_lww)
+    assert sorted(once.columns) == sorted(shaped.columns)
+    assert _rows(resolve(once, keys, PAYLOAD, column_lww=column_lww)) == _rows(once)
+    halves = resolve(
+        shaped.withColumn("_h", F.col("seq") % 2), [*keys, "_h"], PAYLOAD,
+        column_lww=column_lww,
+    ).drop("_h")
+    assert _rows(resolve(halves, keys, PAYLOAD, column_lww=column_lww)) == _rows(once)
+    n = {(r.repo, r.path): r._n for r in once.collect()}
+    assert sum(n.values()) == len(events)
 
 
 def test_mor_modes_equal_cow_and_fold(spark, tmp_path):

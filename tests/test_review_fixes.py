@@ -1,6 +1,6 @@
 """Regression tests for the round-3 code-review findings on the core
 engine (crash-window healing, typed nulls in MOR evolution, create race,
-NULL-content verification, operational-file retention, loud contracts)."""
+NULL-content verification, operational-file retention)."""
 
 import os
 
@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 from forklift_spark.lakette.table import CommitConflictError, LaketteTable
 from forklift_spark.operators.merge import (
     compact,
-    lww_dedupe,
     merge_into,
     read_lineage,
     read_metrics,
@@ -20,7 +19,6 @@ from forklift_spark.streaming.ingest import (
     CHANGELOG_SCHEMA_V2,
     create_entity_table,
     open_or_create_entity_table,
-    run_ingest,
     verify_state,
 )
 
@@ -130,15 +128,3 @@ def test_expire_epochs_retention(spark, tmp_path):
     kept = sorted(int(f[:-5]) for f in os.listdir(os.path.join(table.epochs_dir, "q")))
     assert kept == [4, 5]
     assert read_lineage(spark, table).count() == 2
-
-
-def test_loud_contracts_for_skew_signal(spark, tmp_path):
-    df = spark.createDataFrame(_rows([("I", 1, "r", "a.py", "x")]), CHANGELOG_SCHEMA)
-    with pytest.raises(ValueError, match="count_col is not supported"):
-        lww_dedupe(df, ["repo", "path"], "seq", prefilter=True, count_col="_n")
-    table = create_entity_table(str(tmp_path / "tbl"), n_buckets=2)
-    with pytest.raises(ValueError, match="salt_buckets='auto' requires"):
-        run_ingest(
-            spark, str(tmp_path), table, str(tmp_path / "ckpt"),
-            salt_buckets="auto", dedupe_strategy="prefilter",
-        )

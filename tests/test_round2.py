@@ -523,49 +523,6 @@ def test_shingle_df_cap_drops_stop_shingles(spark):
     assert set(got) == {(1, 2)} and got[(1, 2)] == 1.0
 
 
-# -------------------------------------------- prefilter dedupe strategy
-
-
-def test_prefilter_dedupe_equals_agg(spark, tmp_path):
-    """argmax-by-reference == plain argmax: same final table state and the
-    same batch_rows metric (the winner-agg observation must count each
-    input row exactly once despite the two-branch plan)."""
-    spec = ChangelogSpec(n_events=4_000, n_repos=8, paths_per_repo=20, seed=11,
-                         duplicate_fraction=0.1)
-    log = tmp_path / "log"
-    generate_changelog(spec, str(log))
-    n_delivered = (
-        spark.read.schema(CHANGELOG_SCHEMA).parquet(f"{log}/seg-*.parquet").count()
-    )
-
-    from forklift_spark.streaming.ingest import replay_batch
-
-    t_agg = create_entity_table(str(tmp_path / "agg"), n_buckets=8)
-    s_agg = replay_batch(spark, str(log), t_agg, query_id="a", mode="cow")
-    t_pre = create_entity_table(str(tmp_path / "pre"), n_buckets=8)
-    s_pre = replay_batch(spark, str(log), t_pre, query_id="p", mode="cow",
-                         dedupe_strategy="prefilter")
-    assert s_pre.batch_rows == s_agg.batch_rows == n_delivered
-    a = t_agg.snapshot(spark).select("repo", "path", "seq", "content_sha")
-    p = t_pre.snapshot(spark).select("repo", "path", "seq", "content_sha")
-    assert a.exceptAll(p).count() == 0 and p.exceptAll(a).count() == 0
-
-    exp = spark.createDataFrame(expected_final_state(spec))
-    assert verify_state(spark, t_pre, exp)["ok"]
-
-
-def test_prefilter_standalone_lww(spark):
-    df = spark.createDataFrame(
-        [("r", "p", 1, "a"), ("r", "p", 3, "c"), ("r", "p", 2, "b"),
-         ("r", "q", 9, "z"), ("r", "q", 9, "z")],  # duplicate delivery of the winner
-        "repo string, path string, seq long, content string",
-    )
-    out = lww_dedupe(df, ["repo", "path"], "seq", prefilter=True).collect()
-    assert {(r.repo, r.path, r.seq, r.content) for r in out} == {
-        ("r", "p", 3, "c"), ("r", "q", 9, "z")
-    }
-
-
 # --------------------------------------------------------- table stats
 
 
