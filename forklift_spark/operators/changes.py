@@ -16,7 +16,7 @@ reads on both sides. Change taxonomy per logical key:
 Emitted columns: change, key cols, seq (new side), content_sha (new side;
 NULL for deletes) — plus, with `full_rows=True`, every user payload column
 from the new side, which makes the change set directly APPLYABLE as a merge
-batch downstream (operators/replicate.py). At 100 TB the join reads only
+batch downstream (operators/replicate.py, operators/feed.py). At 100 TB the join reads only
 the two metadata file lists — no log replay — and prunes to buckets whose
 file sets differ between the versions (changed_buckets_only=True, the
 default)."""
@@ -45,8 +45,9 @@ def diff_frames(
     old_seq: bool = False,
 ) -> DataFrame:
     """Row-level change set turning `old` into `new` — the join core shared
-    by snapshot_diff (two versions of one table) and replicate's resync
-    path (two DIFFERENT tables whose histories diverged past vacuum).
+    by snapshot_diff (two versions of one table) and the feed repair epoch
+    (operators/feed.py `repair_epoch`: two DIFFERENT tables whose histories
+    diverged past vacuum, or a destination against its expected state).
 
     Both frames carry key cols + payload cols + seq + deleted (snapshot
     include_deleted=True shape).

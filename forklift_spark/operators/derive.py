@@ -11,8 +11,8 @@ It composes the engine's three existing primitives into the pattern every
 real lakehouse user builds next:
 
   * offsets  = the destination's idempotent epoch markers under
-    `derive_id`, epoch = source version (operators/replicate.py pattern) —
-    resumable from any crash with no extra state;
+    `derive_id`, epoch = source version (operators/feed.py) — resumable
+    from any crash with no extra state;
   * spans    = `snapshot_diff(last, current, full_rows=True)`
     (operators/changes.py) — one full-outer join over bucket-pruned reads;
   * transform = `compile_mapping` (functions/mapping.py) — ONE Catalyst
@@ -49,16 +49,13 @@ past the evolution. The DERIVED schema itself is fixed by the spec at
 create time — the spec IS the derived table's contract.
 
 If the source vacuumed past the destination's last-applied version, the
-span chain is broken: `derive` falls back to a one-epoch RESYNC — expected
-state = transform of the current source snapshot, state-diffed against the
-destination (extra destination keys emitted as deletes) and applied with
-``overwrite=True`` — repairing the replica while shipping only differing
-rows (same repair shape as operators/replicate.py).
+span chain is broken: `derive` falls back to a one-epoch RESYNC, the
+repair epoch of operators/feed.py with the transform of the current
+source snapshot as its expected state.
 """
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -66,10 +63,20 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.mapping import MappingSpec, compile_mapping
-from ..lakette.table import CommitConflictError, LaketteTable, META_COL_NAMES
-from .changes import diff_frames, snapshot_diff
-from .merge import MergeStats, merge_into
-from .replicate import last_replicated_version
+from ..lakette.table import LaketteTable, META_COL_NAMES
+from .changes import snapshot_diff
+from .feed import (
+    _guarded_seq,
+    _keep_expr,
+    _spec_guard,
+    apply_epoch,
+    chain_intact,
+    last_replicated_version,
+    open_or_create,
+    repair_epoch,
+    state_events,
+)
+from .merge import MergeStats
 
 
 @dataclass
@@ -141,79 +148,6 @@ def _spec_fingerprint(mapping: MappingSpec, predicate) -> dict:
     return {"mapping": ent, "predicate": pred}
 
 
-def _spec_guard(
-    dst: LaketteTable, derive_id: str, fp: dict, allow_spec_change: bool,
-    force_resync: bool = False,
-) -> tuple[str, bool, "callable"]:
-    """Shared drift guard for derive() and derive_agg(): persist the
-    transform's fingerprint next to the destination; raise when a later
-    call presents a DIFFERENT spec (incremental spans under a new spec
-    would silently mix old- and new-spec rows) unless the caller opted
-    into a resync. Returns (qid, spec_changed, store_fp):
-
-      qid     epoch-marker namespace, keyed per SPEC (`derive_id@fp-hash`)
-              so an accepted spec change starts from fresh offsets and its
-              resync epoch can never be skipped by the old spec's markers;
-              a crash between the resync commit and the fingerprint write
-              re-enters and heals idempotently (the marker gates the merge)
-      store_fp  call after the first successful apply under this spec.
-
-    A persisted REPAIR GENERATION (`_repair_gen` alongside the
-    fingerprint) is folded into the qid and bumped on every resync
-    trigger — an accepted spec change or `force_resync=True`. This makes
-    every resync epoch land in a marker namespace no previous epoch ever
-    used, which (a) lets a caller force a full re-derivation at an
-    UNCHANGED source version (repairing out-of-band destination drift —
-    the old per-spec qid already holds a marker at that version and would
-    skip the merge), and (b) closes the A->B->A spec flip-flop hole:
-    returning to a previously-used spec used to resurrect its old qid
-    whose markers claimed the resync version was already applied,
-    silently leaving B-spec rows behind. The bump is crash-idempotent: a
-    retry recomputes the same generation (stored gen never advanced) and
-    re-enters the same fresh namespace, where the marker gates the merge."""
-    import hashlib
-    import json as _json
-
-    fp_dir = os.path.join(dst.root, "_derive")
-    fp_path = os.path.join(fp_dir, f"{derive_id}.json")
-    spec_changed = False
-    gen = 0
-    if dst.fs.exists(fp_path):
-        stored = dst.fs.read_json(fp_path)
-        gen = int(stored.pop("_repair_gen", 0))
-        if stored != fp:
-            if not allow_spec_change:
-                raise ValueError(
-                    f"derive spec for {derive_id!r} differs from the one this "
-                    f"destination was built with — incremental spans under a "
-                    f"new spec would mix old- and new-spec rows. Pass "
-                    f"allow_spec_change=True to re-derive every row via a "
-                    f"resync epoch under the new spec."
-                )
-            spec_changed = True
-    if spec_changed or force_resync:
-        gen += 1
-
-    qid = (
-        derive_id + "@"
-        + hashlib.sha256(_json.dumps(fp, sort_keys=True).encode()).hexdigest()[:8]
-        + (f"+r{gen}" if gen else "")
-    )
-
-    def store_fp() -> None:
-        dst.fs.makedirs(fp_dir)
-        dst.fs.put_json(fp_path, {**fp, "_repair_gen": gen} if gen else fp)
-
-    return qid, spec_changed, store_fp
-
-
-def _keep_expr(predicate: Column | str | None) -> Column:
-    if predicate is None:
-        return F.lit(True)
-    col = F.expr(predicate) if isinstance(predicate, str) else predicate
-    return F.coalesce(col, F.lit(False))  # NULL predicate = fail, loudly false
-
-
 def _events_from_span(
     diff: DataFrame,
     mapping: MappingSpec,
@@ -226,12 +160,8 @@ def _events_from_span(
     (module docstring). One Catalyst projection; D rows carry NULL payload
     (tombstones store no payload).
 
-    `mor_guard=True` (the span must carry `_old_seq`) raises INSIDE the
-    merge job — zero extra Spark jobs — on any row whose seq did not
-    advance past the pre-span seq: a MOR destination resolves reads by
-    max(seq), so a non-advancing change (source predicate DML preserves
-    seq; restore regresses it) would either be silently lost or decay to
-    an arbitrary same-seq tie. Loud beats either."""
+    `mor_guard=True` (the span must carry `_old_seq`) raises inside the
+    merge job on any row whose seq did not advance (feed._guarded_seq)."""
     from ..functions.mapping import _compile_entry
 
     live = F.col("change").isin("insert", "update")
@@ -250,31 +180,6 @@ def _events_from_span(
             for (name, entry), fld in zip(payload.items(), mapped.schema.fields)
         ],
         _guarded_seq(key_cols) if mor_guard else F.col("seq"),
-    )
-
-
-def _guarded_seq(key_cols: list[str]) -> Column:
-    """seq column that raises on a non-seq-advancing span row (requires
-    `_old_seq` from diff_frames(old_seq=True)); see _events_from_span."""
-    non_advancing = F.col("_old_seq").isNotNull() & (
-        F.col("seq") <= F.col("_old_seq")
-    )
-    msg = F.concat_ws(
-        "",
-        F.lit("mor destination cannot express a non-seq-advancing source "
-              "change (predicate DML preserves seq; restore regresses it): "
-              "key=("),
-        F.concat_ws(",", *[F.col(k).cast("string") for k in key_cols]),
-        F.lit(") seq "),
-        F.col("seq").cast("string"),
-        F.lit(" <= prior "),
-        F.col("_old_seq").cast("string"),
-        F.lit(" — use a cow destination or resync"),
-    )
-    return (
-        F.when(non_advancing, F.raise_error(msg).cast("long"))
-        .otherwise(F.col("seq"))
-        .alias("seq")
     )
 
 
@@ -353,21 +258,13 @@ def derive(
     target_v = int(src_meta["version"])
     key_cols = list(src_meta["key_cols"])
     _validate_spec(mapping, key_cols)
-
-    if LaketteTable.exists(dst_root):
-        dst = LaketteTable(dst_root)
-    else:
-        schema = _derived_schema(spark, src, mapping, key_cols)
-        try:
-            dst = LaketteTable.create(
-                dst_root,
-                schema,
-                key_cols,
-                n_buckets=int(n_buckets or src_meta["n_buckets"]),
-                target_file_rows=src_meta.get("target_file_rows"),
-            )
-        except CommitConflictError:
-            dst = LaketteTable(dst_root)  # a twin deriver created it first
+    dst = open_or_create(dst_root, lambda: LaketteTable.create(
+        dst_root,
+        _derived_schema(spark, src, mapping, key_cols),
+        key_cols,
+        n_buckets=int(n_buckets or src_meta["n_buckets"]),
+        target_file_rows=src_meta.get("target_file_rows"),
+    ))
     report = DeriveReport(src_version=target_v)
 
     # spec drift guard (see docstring / _spec_guard)
@@ -375,59 +272,19 @@ def derive(
         dst, derive_id, _spec_fingerprint(mapping, predicate), allow_spec_change,
         force_resync=force_resync,
     )
+    payload_cols = list(_payload_spec(mapping, key_cols))
 
-    def _apply(batch: DataFrame, epoch: int, *, mode_: str, overwrite: bool = False):
-        # twin tolerance (replicate pattern): a twin deriver that raced us
-        # past the marker check and won makes OUR application redundant —
-        # re-enter merge_into, which skips on the twin's marker.
-        try:
-            return merge_into(
-                spark, dst, batch, query_id=qid, epoch=epoch,
-                mode=mode_, overwrite=overwrite,
-            )
-        except CommitConflictError:
-            if not dst.epoch_committed(qid, epoch):
-                raise
-            return merge_into(
-                spark, dst, batch, query_id=qid, epoch=epoch,
-                mode=mode_, overwrite=overwrite,
-            )
-
-    def _resync() -> DeriveReport:
-        # expected = transform of the current source snapshot; state-diff
-        # vs the destination (repair=True catches same-seq divergence and
-        # emits deletes for extra dst keys), applied with overwrite=True
-        # through the COW path.
-        report.resync = True
-        expected = _expected_state(
+    def _expected() -> DataFrame:
+        return _expected_state(
             src.snapshot(spark, include_deleted=True, metadata=src_meta),
             mapping, key_cols, predicate,
         )
-        payload_names = set(_payload_spec(mapping, key_cols))
-        # the repair diff compares every column BOTH scans carry: when
-        # content_sha witnesses the whole payload (payload == {content})
-        # a keys-only destination read suffices; any other payload must be
-        # read so same-seq divergence in it (a spec-change resync's whole
-        # point) is visible to the diff
-        dst_snap = dst.snapshot(
-            spark, include_deleted=True,
-            columns=[] if payload_names == {"content"} else None,
-        )
-        payload_cols = [
-            c for c in expected.columns
-            if c not in key_cols and c not in ("seq", "deleted", "content_sha")
-        ]
-        diff = diff_frames(
-            dst_snap, expected, key_cols, payload_cols,
-            full_rows=True, repair=True,
-        )
-        op = (
-            F.when(F.col("change") == "delete", F.lit("D")).otherwise(F.lit("U"))
-        )
-        batch = diff.select(op.alias("op"), *key_cols, *payload_cols, F.col("seq"))
-        report.applied_epochs.append(
-            _apply(batch, target_v, mode_="cow", overwrite=True)
-        )
+
+    def _resync() -> DeriveReport:
+        report.resync = True
+        report.applied_epochs.append(repair_epoch(
+            spark, dst, _expected(), key_cols, payload_cols, qid, target_v
+        ))
         _store_fp()
         return report
 
@@ -441,32 +298,23 @@ def derive(
         # initial sync: transform of the whole current snapshot, one epoch.
         # Source tombstones derive as deletes (LWW floor transfers).
         report.initial_sync = True
-        snap = src.snapshot(spark, include_deleted=True, metadata=src_meta)
-        state = _expected_state(snap, mapping, key_cols, predicate)
-        batch = state.select(
-            F.when(F.col("deleted"), F.lit("D")).otherwise(F.lit("U")).alias("op"),
-            *key_cols,
-            *[c for c in state.columns
-              if c not in key_cols and c not in ("seq", "deleted", "content_sha")],
-            F.col("seq"),
+        batch = state_events(_expected(), key_cols, payload_cols)
+        report.applied_epochs.append(
+            apply_epoch(spark, dst, batch, qid, target_v, mode=mode)
         )
-        report.applied_epochs.append(_apply(batch, target_v, mode_=mode))
         _store_fp()
         return report
     if last >= target_v:
         report.src_version = last
         return report  # already current
-
-    try:
-        src._raw_metadata_at(last)  # is the chain from `last` still readable?
-        spans = (
-            [(v - 1, v) for v in range(last + 1, target_v + 1)]
-            if every_version
-            else [(last, target_v)]
-        )
-    except ValueError:
+    if not chain_intact(src, last):
         return _resync()  # vacuumed past the derived table's offset — repair
 
+    spans = (
+        [(v - 1, v) for v in range(last + 1, target_v + 1)]
+        if every_version
+        else [(last, target_v)]
+    )
     for lo, hi in spans:
         if dst.epoch_committed(qid, hi):
             continue  # a crashed previous run already landed this span
@@ -487,9 +335,9 @@ def derive(
         # cannot express a non-advancing update — with mode='mor', such a
         # row raises INSIDE the merge job (_guarded_seq): resync or a cow
         # destination is the remedy, never an arbitrary same-seq tie.
-        report.applied_epochs.append(
-            _apply(events, hi, mode_=mode, overwrite=(mode == "cow"))
-        )
+        report.applied_epochs.append(apply_epoch(
+            spark, dst, events, qid, hi, mode=mode, overwrite=(mode == "cow")
+        ))
     return report
 
 

@@ -7,8 +7,8 @@ derived keys it contributed to. This module IS that other operator.
 `derive_agg` maintains a destination lakette table keyed by GROUP columns
 as a grouped aggregation of a source lakette table, incrementally — each
 call consumes the committed-version span since the last applied one and
-updates ONLY the affected groups, exactly-once, with the same offset /
-spec-drift / vacuum-resync machinery as derive().
+updates ONLY the affected groups, exactly-once, with the offsets,
+spec-drift guard and vacuum resync of operators/feed.py.
 
 Two maintenance strategies, chosen by aggregate algebra (Larson-style
 incremental view maintenance split into the self-maintainable and
@@ -78,16 +78,18 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..lakette.table import (
-    CommitConflictError,
-    LaketteTable,
-    META_COL_NAMES,
-    META_COLS,
+from ..lakette.table import LaketteTable, META_COL_NAMES, META_COLS
+from .changes import snapshot_diff
+from .feed import (
+    _keep_expr,
+    _spec_guard,
+    apply_epoch,
+    chain_intact,
+    last_replicated_version,
+    open_or_create,
+    repair_epoch,
 )
-from .changes import diff_frames, snapshot_diff
-from .derive import _keep_expr, _spec_guard
-from .merge import MergeStats, merge_into
-from .replicate import last_replicated_version
+from .merge import MergeStats
 
 #: auto-maintained liveness/count column — reserved in specs
 N_ROWS = "n_rows"
@@ -372,7 +374,8 @@ def derive_agg(
     A changed spec raises unless `allow_spec_change=True`, which REBUILDS
     the destination under the new spec (drop + recreate + one recompute
     epoch — additive-only schema evolution cannot drop a removed aggregate
-    column, and gold tables are small; same drift guard as derive()).
+    column, and gold tables are small; same drift guard as derive(),
+    feed._spec_guard).
     `force_resync=True` repairs out-of-band gold drift at an UNCHANGED
     spec: full recompute, state-diffed against the destination and applied
     in a fresh marker namespace (SQL: REFRESH MATERIALIZED VIEW x FULL)."""
@@ -393,18 +396,9 @@ def derive_agg(
         if f["name"] not in key_cols and f["name"] not in META_COL_NAMES
     ]
 
-    if LaketteTable.exists(dst_root):
-        dst = LaketteTable(dst_root)
-    else:
-        try:
-            dst = LaketteTable.create(
-                dst_root,
-                schema,
-                gnames,
-                n_buckets=int(n_buckets or src_meta["n_buckets"]),
-            )
-        except CommitConflictError:
-            dst = LaketteTable(dst_root)  # a twin deriver created it first
+    dst = open_or_create(dst_root, lambda: LaketteTable.create(
+        dst_root, schema, gnames, n_buckets=int(n_buckets or src_meta["n_buckets"])
+    ))
 
     fp = {
         "kind": "derive_agg",
@@ -432,20 +426,6 @@ def derive_agg(
             .agg(*_agg_exprs(aggs, types, strategy == "delta"))
         )
 
-    def _apply(batch: DataFrame, epoch: int, *, overwrite: bool = False) -> MergeStats:
-        try:
-            return merge_into(
-                spark, dst, batch, query_id=qid, epoch=epoch,
-                mode=mode, overwrite=overwrite,
-            )
-        except CommitConflictError:
-            if not dst.epoch_committed(qid, epoch):
-                raise
-            return merge_into(
-                spark, dst, batch, query_id=qid, epoch=epoch,
-                mode=mode, overwrite=overwrite,
-            )
-
     def _state_to_batch(state: DataFrame, epoch: int) -> DataFrame:
         return state.select(
             F.lit("U").alias("op"), *gnames, *agg_payload,
@@ -454,14 +434,12 @@ def derive_agg(
 
     def _resync() -> AggDeriveReport:
         # vacuum-broken-chain repair (spec UNchanged, so the gold schema
-        # is identical): expected gold state = full recompute; state-diff
-        # vs the destination (repair=True also emits deletes for groups
-        # the gold table holds but the recompute lacks) applied with
-        # overwrite — same repair shape as derive()/replicate(). Every
-        # surviving group gets rewritten (expected seq = target_v is
-        # strictly greater than any stored seq, so repair classifies them
-        # all); gold tables are the small end of the pipeline, and a
-        # resync is the broken-chain exception, not the steady state.
+        # is identical): feed.repair_epoch with the full recompute as the
+        # expected state. Every surviving group gets rewritten (expected
+        # seq = target_v is strictly greater than any stored seq, so
+        # repair classifies them all); gold tables are the small end of
+        # the pipeline, and a resync is the broken-chain exception, not
+        # the steady state.
         report.resync = True
         expected = (
             _recompute(src.snapshot(spark, metadata=src_meta))
@@ -469,13 +447,9 @@ def derive_agg(
             .withColumn("deleted", F.lit(False))
             .withColumn("content_sha", F.lit(None).cast("string"))
         )
-        dst_snap = dst.snapshot(spark, include_deleted=True)
-        diff = diff_frames(
-            dst_snap, expected, gnames, agg_payload, full_rows=True, repair=True
-        )
-        op = F.when(F.col("change") == "delete", F.lit("D")).otherwise(F.lit("U"))
-        batch = diff.select(op.alias("op"), *gnames, *agg_payload, F.col("seq"))
-        report.applied_epochs.append(_apply(batch, target_v, overwrite=True))
+        report.applied_epochs.append(repair_epoch(
+            spark, dst, expected, gnames, agg_payload, qid, target_v
+        ))
         store_fp()
         return report
 
@@ -510,16 +484,16 @@ def derive_agg(
     if last is None:
         report.initial_sync = True
         state = _recompute(src.snapshot(spark, metadata=src_meta))
-        report.applied_epochs.append(_apply(_state_to_batch(state, target_v), target_v))
+        report.applied_epochs.append(apply_epoch(
+            spark, dst, _state_to_batch(state, target_v), qid, target_v, mode=mode
+        ))
         store_fp()
         return report
     if last >= target_v:
         report.src_version = last
         return report  # already current
 
-    try:
-        src._raw_metadata_at(last)  # is the chain from `last` still readable?
-    except ValueError:
+    if not chain_intact(src, last):
         return _resync()  # vacuumed past the gold table's offset — repair
 
     if dst.epoch_committed(qid, target_v):
@@ -555,7 +529,9 @@ def derive_agg(
             *[F.col(f"r.{c}").alias(c) for c in agg_payload],
             F.lit(target_v).cast("long").alias("seq"),
         )
-        report.applied_epochs.append(_apply(batch, target_v))
+        report.applied_epochs.append(
+            apply_epoch(spark, dst, batch, qid, target_v, mode=mode)
+        )
         return report
 
     # --- delta strategy: retraction feed -> per-group net deltas ->
@@ -614,7 +590,9 @@ def derive_agg(
             *vals,
             F.lit(target_v).cast("long").alias("seq"),
         )
-        report.applied_epochs.append(_apply(batch, target_v))
+        report.applied_epochs.append(
+            apply_epoch(spark, dst, batch, qid, target_v, mode=mode)
+        )
     finally:
         deltas.unpersist()
     return report

@@ -36,8 +36,8 @@ Maintenance per epoch (one changefeed span, `old_rows=True`):
                               race two ops on one index key at equal seq
 
 Exactly-once, crash-resume, spec-drift guard, vacuumed-chain resync and
-`force_resync` (REFRESH ... FULL semantics) are the shared derive
-contracts (`_spec_guard` + epoch markers + state-diff repair).
+`force_resync` (REFRESH ... FULL semantics) are the feed protocol of
+operators/feed.py (`_spec_guard` + epoch markers + `repair_epoch`).
 """
 
 from __future__ import annotations
@@ -49,11 +49,19 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..lakette.table import CommitConflictError, LaketteTable
-from .changes import diff_frames, snapshot_diff
-from .derive import _keep_expr, _spec_guard
-from .merge import MergeStats, merge_into
-from .replicate import last_replicated_version
+from ..lakette.table import LaketteTable
+from .changes import snapshot_diff
+from .feed import (
+    _keep_expr,
+    _spec_guard,
+    _spec_qid,
+    apply_epoch,
+    chain_intact,
+    last_replicated_version,
+    open_or_create,
+    repair_epoch,
+)
+from .merge import MergeStats
 
 
 @dataclass
@@ -123,32 +131,25 @@ def derive_index(
     key_cols = list(src_meta["key_cols"])
     if term_col in key_cols:
         raise ValueError(f"term_col {term_col!r} collides with a source key")
-    payload_cols = [
-        f.name for f in src.user_schema().fields if f.name not in key_cols
-    ]
+    src_fields = {f.name: f for f in src.user_schema().fields}
+    payload_cols = [n for n in src_fields if n not in key_cols]
     tf = _term_field(spark, src, term_expr, term_col)
     index_keys = [term_col, *key_cols]
     keep = _keep_expr(predicate)
 
-    if LaketteTable.exists(dst_root):
-        dst = LaketteTable(dst_root)
-    else:
-        src_fields = {f.name: f for f in src.user_schema().fields}
-        schema = T.StructType([tf, *[src_fields[k] for k in key_cols]])
-        try:
-            dst = LaketteTable.create(
-                dst_root, schema, index_keys,
-                n_buckets=int(n_buckets or src_meta["n_buckets"]),
-                # file size bounds how tight each file's term range is —
-                # lookups open ~1 file per bucket, not the whole bucket
-                target_file_rows=(
-                    target_file_rows
-                    if target_file_rows is not None
-                    else src_meta.get("target_file_rows")
-                ),
-            )
-        except CommitConflictError:
-            dst = LaketteTable(dst_root)  # a twin deriver created it first
+    dst = open_or_create(dst_root, lambda: LaketteTable.create(
+        dst_root,
+        T.StructType([tf, *[src_fields[k] for k in key_cols]]),
+        index_keys,
+        n_buckets=int(n_buckets or src_meta["n_buckets"]),
+        # file size bounds how tight each file's term range is —
+        # lookups open ~1 file per bucket, not the whole bucket
+        target_file_rows=(
+            target_file_rows
+            if target_file_rows is not None
+            else src_meta.get("target_file_rows")
+        ),
+    ))
 
     fp = {
         "kind": "derive_index",
@@ -160,20 +161,6 @@ def derive_index(
         dst, derive_id, fp, allow_spec_change, force_resync=force_resync
     )
     report = IndexDeriveReport(src_version=target_v)
-
-    def _apply(batch: DataFrame, epoch: int, *, overwrite: bool = False) -> MergeStats:
-        try:
-            return merge_into(
-                spark, dst, batch, query_id=qid, epoch=epoch,
-                mode="cow", overwrite=overwrite,
-            )
-        except CommitConflictError:
-            if not dst.epoch_committed(qid, epoch):
-                raise
-            return merge_into(
-                spark, dst, batch, query_id=qid, epoch=epoch,
-                mode="cow", overwrite=overwrite,
-            )
 
     def _expected(snap: DataFrame) -> DataFrame:
         """Index state of a source snapshot: one posting per live,
@@ -193,13 +180,9 @@ def derive_index(
             .withColumn("deleted", F.lit(False))
             .withColumn("content_sha", F.lit(None).cast("string"))
         )
-        dst_snap = dst.snapshot(spark, include_deleted=True)
-        diff = diff_frames(
-            dst_snap, expected, index_keys, [], full_rows=True, repair=True
-        )
-        op = F.when(F.col("change") == "delete", F.lit("D")).otherwise(F.lit("U"))
-        batch = diff.select(op.alias("op"), *index_keys, F.col("seq"))
-        report.applied_epochs.append(_apply(batch, target_v, overwrite=True))
+        report.applied_epochs.append(repair_epoch(
+            spark, dst, expected, index_keys, [], qid, target_v
+        ))
         store_fp()
         return report
 
@@ -213,16 +196,16 @@ def derive_index(
         batch = _expected(snap).select(
             F.lit("U").alias("op"), *index_keys, F.col("seq")
         )
-        report.applied_epochs.append(_apply(batch, target_v))
+        report.applied_epochs.append(
+            apply_epoch(spark, dst, batch, qid, target_v, mode="cow")
+        )
         store_fp()
         return report
     if last >= target_v:
         report.src_version = last
         return report  # already current
 
-    try:
-        src._raw_metadata_at(last)
-    except ValueError:
+    if not chain_intact(src, last):
         return _resync()  # vacuumed past the index's offset — repair
 
     if dst.epoch_committed(qid, target_v):
@@ -260,9 +243,10 @@ def derive_index(
         F.lit("D").alias("op"),
         F.col("_old_term").alias(term_col), *key_cols, F.col("seq"),
     )
-    report.applied_epochs.append(
-        _apply(ups.unionByName(dels), target_v, overwrite=True)
-    )
+    report.applied_epochs.append(apply_epoch(
+        spark, dst, ups.unionByName(dels), qid, target_v,
+        mode="cow", overwrite=True,
+    ))
     return report
 
 
@@ -274,20 +258,12 @@ def index_version(dst: LaketteTable, derive_id: str = "index") -> int | None:
     Spark session, no snapshot. The freshness gate for transparent SQL
     index acceleration: a lookup may only be served from an index whose
     `index_version` >= the source's current version."""
-    import hashlib
-    import json as _json
-
     fp_path = os.path.join(dst.root, "_derive", f"{derive_id}.json")
     if not dst.fs.exists(fp_path):
         return None
     stored = dst.fs.read_json(fp_path)
     gen = int(stored.pop("_repair_gen", 0))
-    qid = (
-        derive_id + "@"
-        + hashlib.sha256(_json.dumps(stored, sort_keys=True).encode()).hexdigest()[:8]
-        + (f"+r{gen}" if gen else "")
-    )
-    return last_replicated_version(dst, qid)
+    return last_replicated_version(dst, _spec_qid(derive_id, stored, gen))
 
 
 def index_lookup(

@@ -55,9 +55,9 @@ with the old pair, recomputes a superset span, and the marker (same
 sum) skips the double-apply; if a source advanced meanwhile the sum
 differs, and re-applying the wider span through overwrite is
 idempotent state traffic. If either source vacuumed past its offset,
-the refresh falls back to a one-epoch RESYNC (expected state =
-recompute of the join at the pinned targets, state-diffed against the
-destination, overwrite) — repair, never corruption.
+the refresh falls back to a one-epoch RESYNC: the repair epoch of
+operators/feed.py with the join recomputed at the pinned targets as its
+expected state — repair, never corruption.
 """
 
 from __future__ import annotations
@@ -70,11 +70,19 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.mapping import MappingSpec, compile_mapping, _compile_entry
-from ..lakette.table import CommitConflictError, LaketteTable, META_COL_NAMES
-from .changes import diff_frames, snapshot_diff
-from .derive import _spec_guard, _validate_spec
-from .merge import MergeStats, merge_into
-from .replicate import last_replicated_version
+from ..lakette.table import LaketteTable, META_COL_NAMES
+from .changes import snapshot_diff
+from .derive import _payload_spec, _validate_spec
+from .feed import (
+    _spec_guard,
+    apply_epoch,
+    chain_intact,
+    last_replicated_version,
+    open_or_create,
+    repair_epoch,
+    state_events,
+)
+from .merge import MergeStats
 
 
 @dataclass
@@ -160,10 +168,6 @@ def _join_cond(fk_cols: list[str], dim_keys: list[str]):
 
 def _matched(dim_keys: list[str]):
     return F.col(_DK + dim_keys[0]).isNotNull()
-
-
-def _payload_spec(mapping: MappingSpec, key_cols: list[str]) -> dict:
-    return {k: v for k, v in mapping.items() if k not in key_cols}
 
 
 def _joined_schema(
@@ -334,20 +338,13 @@ def derive_join(
     fk_cols, dim_keys = _validate_on(on, fact_meta, dim_meta)
     _validate_spec(mapping, key_cols)
 
-    if LaketteTable.exists(dst_root):
-        dst = LaketteTable(dst_root)
-    else:
-        schema = _joined_schema(
-            spark, fact, fact_meta, dim_meta, mapping, dim_prefix
-        )
-        try:
-            dst = LaketteTable.create(
-                dst_root, schema, key_cols,
-                n_buckets=int(n_buckets or fact_meta["n_buckets"]),
-                target_file_rows=fact_meta.get("target_file_rows"),
-            )
-        except CommitConflictError:
-            dst = LaketteTable(dst_root)  # twin deriver created it first
+    dst = open_or_create(dst_root, lambda: LaketteTable.create(
+        dst_root,
+        _joined_schema(spark, fact, fact_meta, dim_meta, mapping, dim_prefix),
+        key_cols,
+        n_buckets=int(n_buckets or fact_meta["n_buckets"]),
+        target_file_rows=fact_meta.get("target_file_rows"),
+    ))
 
     report = DeriveJoinReport(fact_version=tf, dim_version=td)
     fp = {
@@ -365,20 +362,6 @@ def derive_join(
     )
     off_path = os.path.join(dst.root, "_derive", f"{derive_id}.offsets.json")
 
-    def _apply(batch: DataFrame, epoch: int) -> MergeStats:
-        try:
-            return merge_into(
-                spark, dst, batch, query_id=qid, epoch=epoch,
-                mode="cow", overwrite=True,
-            )
-        except CommitConflictError:
-            if not dst.epoch_committed(qid, epoch):
-                raise
-            return merge_into(
-                spark, dst, batch, query_id=qid, epoch=epoch,
-                mode="cow", overwrite=True,
-            )
-
     def _store_offsets() -> None:
         dst.fs.makedirs(os.path.dirname(off_path))
         dst.fs.put_json(off_path, {"fact": tf, "dim": td})
@@ -389,37 +372,17 @@ def derive_join(
         expected = _expected_join_state(
             spark, fact, dim, fact_meta, dim_meta, on, mapping, how, dim_prefix
         )
+        payload_cols = list(_payload_spec(mapping, key_cols))
         if initial:
-            batch = expected.select(
-                F.when(F.col("deleted"), F.lit("D"))
-                .otherwise(F.lit("U")).alias("op"),
-                *key_cols,
-                *[c for c in expected.columns
-                  if c not in key_cols
-                  and c not in ("seq", "deleted", "content_sha")],
-                F.col("seq"),
+            batch = state_events(expected, key_cols, payload_cols)
+            stats = apply_epoch(
+                spark, dst, batch, qid, tf + td, mode="cow", overwrite=True
             )
         else:
-            # FULL payload read: the repair diff must see every column —
-            # content_sha witnesses only a content column, and a resync's
-            # whole point is same-seq divergence (spec change, dim drift)
-            dst_snap = dst.snapshot(spark, include_deleted=True)
-            payload_cols = [
-                c for c in expected.columns
-                if c not in key_cols and c not in ("seq", "deleted", "content_sha")
-            ]
-            diff = diff_frames(
-                dst_snap, expected, key_cols, payload_cols,
-                full_rows=True, repair=True,
+            stats = repair_epoch(
+                spark, dst, expected, key_cols, payload_cols, qid, tf + td
             )
-            op = (
-                F.when(F.col("change") == "delete", F.lit("D"))
-                .otherwise(F.lit("U"))
-            )
-            batch = diff.select(
-                op.alias("op"), *key_cols, *payload_cols, F.col("seq")
-            )
-        report.applied_epochs.append(_apply(batch, tf + td))
+        report.applied_epochs.append(stats)
         store_fp()
         _store_offsets()
         return report
@@ -446,10 +409,7 @@ def derive_join(
         report.fact_version, report.dim_version = lf, ld
         return report  # already current
 
-    try:
-        fact._raw_metadata_at(lf)
-        dim._raw_metadata_at(ld)
-    except ValueError:
+    if not (chain_intact(fact, lf) and chain_intact(dim, ld)):
         return _full(initial=False)  # a source vacuumed past our offset
 
     if dst.epoch_committed(qid, tf + td):
@@ -532,6 +492,8 @@ def derive_join(
     batch = parts[0]
     for p in parts[1:]:
         batch = batch.unionByName(p)
-    report.applied_epochs.append(_apply(batch, tf + td))
+    report.applied_epochs.append(apply_epoch(
+        spark, dst, batch, qid, tf + td, mode="cow", overwrite=True
+    ))
     _store_offsets()
     return report

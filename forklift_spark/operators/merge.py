@@ -300,8 +300,8 @@ def merge_into(
 
     `overwrite=True` suspends the LWW guard for matched keys: every
     incoming row is taken regardless of the existing row's seq. This is
-    the REPAIR primitive (replicate's resync uses it to force a diverged
-    replica back to the source's exact rows and seqs) — not an ingest
+    the REPAIR primitive (feed.repair_epoch uses it to force a diverged
+    destination back to its expected rows and seqs) — not an ingest
     mode; confluence does not hold under it, and it requires mode="cow"
     (merge-on-read resolves reads by max-seq, which cannot express an
     unconditional overwrite).
@@ -427,8 +427,8 @@ def merge_into(
     if column_lww and overwrite:
         raise ValueError(
             "overwrite=True is not supported on a column_lww table: "
-            "overwrite is the row-level repair primitive (replicate "
-            "resync); per-column state has no force-this-row analogue yet"
+            "overwrite is the row-level repair primitive (feed repair "
+            "epochs); per-column state has no force-this-row analogue yet"
         )
 
     # --- schema evolution (C4): additive ALTER folded into this commit

@@ -7,12 +7,9 @@ feed and applies it to a destination table through the ordinary
 exactly-once merge path, which makes bronze -> silver chaining (and
 cross-region table mirroring) a first-class engine capability:
 
-  * epoch = source version. The destination's idempotent epoch markers
-    (query_id = replication_id) double as replication offsets, so the
-    process is resumable from any crash with no extra state: the next run
-    reads the last marker and continues. A crash between the destination's
-    metadata commit and its marker is the same window merge_into already
-    closes (lakette writer stamp).
+  * epoch = source version, offsets = the destination's epoch markers
+    under query_id = replication_id (operators/feed.py) — resumable from
+    any crash with no extra state.
   * each applied batch is `snapshot_diff(last, current, full_rows=True)` —
     one full-outer join over bucket-pruned reads of exactly the buckets
     whose file sets changed. Cost scales with the CHANGED data, never the
@@ -25,10 +22,9 @@ cross-region table mirroring) a first-class engine capability:
     CURRENT schema, and merge_into's additive-evolution path alters the
     destination in the same epoch.
   * if the source vacuumed past the replica's last-applied version, the
-    version chain is broken — `replicate` falls back to a full RESYNC
-    diff (source snapshot vs destination snapshot, extra destination keys
-    emitted as deletes), which repairs the replica in one epoch while
-    still only shipping differing rows.
+    version chain is broken — `replicate` falls back to a repair epoch
+    whose expected state is the source snapshot (operators/feed.py:
+    offsets, the twin rule and the repair are that module's protocol).
 
 Design note — why this is a driver loop and not a custom streaming
 DataSource: a Python DataSource's partition readers pull row data through
@@ -40,15 +36,23 @@ one `replicate()` call; a live mirror is the same call in a poll loop.
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..lakette.table import META_COL_NAMES, CommitConflictError, LaketteTable
-from .changes import diff_frames, snapshot_diff
-from .merge import MergeStats, merge_into
+from ..lakette.table import META_COL_NAMES, LaketteTable
+from .changes import snapshot_diff
+from .feed import (
+    _guarded_seq,
+    apply_epoch,
+    chain_intact,
+    last_replicated_version,
+    open_or_create,
+    repair_epoch,
+    state_events,
+)
+from .merge import MergeStats
 
 
 @dataclass
@@ -63,24 +67,6 @@ class ReplicationReport:
         return sum(s.applied_rows for s in self.applied_epochs)
 
 
-def last_replicated_version(dst: LaketteTable, replication_id: str) -> int | None:
-    """Highest source version the destination durably applied — the max
-    epoch marker, plus the marker-less crash window (current metadata
-    written by this replication but marker missing)."""
-    best = None
-    d = os.path.join(dst.epochs_dir, replication_id)
-    if os.path.isdir(d):
-        for fn in os.listdir(d):
-            if fn.endswith(".json") and fn[:-5].isdigit():
-                v = int(fn[:-5])
-                best = v if best is None else max(best, v)
-    w = dst._raw_current().get("writer") or {}
-    if w.get("query_id") == replication_id:
-        e = int(w.get("epoch", -1))
-        best = e if best is None else max(best, e)
-    return best
-
-
 def _payload_cols(meta: dict) -> list[str]:
     """Payload columns of a PINNED metadata dict — never the live table
     (the source can evolve between our snapshot read and this call, and
@@ -93,21 +79,6 @@ def _payload_cols(meta: dict) -> list[str]:
     ]
 
 
-def _events_from_state(df: DataFrame, payload_cols: list[str], key_cols) -> DataFrame:
-    """Snapshot rows (include_deleted=True) as a merge envelope — the
-    initial-sync batch. Tombstones replicate as deletes so the replica
-    inherits the source's LWW floor (a late event below a tombstone's seq
-    can never resurrect the key on either side)."""
-    return df.select(
-        F.when(F.coalesce(F.col("deleted"), F.lit(False)), F.lit("D"))
-        .otherwise(F.lit("U"))
-        .alias("op"),
-        *key_cols,
-        *payload_cols,
-        F.col("seq"),
-    )
-
-
 def _events_from_diff(
     diff: DataFrame,
     payload_cols: list[str],
@@ -117,9 +88,7 @@ def _events_from_diff(
 ) -> DataFrame:
     """`mor_guard=True` (diff must carry `_old_seq`) raises inside the
     merge job on any non-seq-advancing row — a MOR destination resolves by
-    max(seq) and cannot express one; see derive._guarded_seq."""
-    from .derive import _guarded_seq
-
+    max(seq) and cannot express one; see feed._guarded_seq."""
     op = (
         F.when(F.col("change") == "insert", F.lit("I"))
         .when(F.col("change") == "update", F.lit("U"))
@@ -150,97 +119,49 @@ def replicate(
     src_meta = src._raw_current()  # snapshot()/plan_files accept raw metadata
     target_v = int(src_meta["version"])
     key_cols = list(src_meta["key_cols"])
-
-    if LaketteTable.exists(dst_root):
-        dst = LaketteTable(dst_root)
-    else:
-        try:
-            dst = LaketteTable.create(
-                dst_root,
-                src.user_schema(),
-                key_cols,
-                n_buckets=int(n_buckets or src_meta["n_buckets"]),
-                target_file_rows=src_meta.get("target_file_rows"),
-            )
-        except CommitConflictError:
-            dst = LaketteTable(dst_root)  # a twin mirror created it first
+    dst = open_or_create(dst_root, lambda: LaketteTable.create(
+        dst_root,
+        src.user_schema(),
+        key_cols,
+        n_buckets=int(n_buckets or src_meta["n_buckets"]),
+        target_file_rows=src_meta.get("target_file_rows"),
+    ))
     payload = _payload_cols(src_meta)
     report = ReplicationReport(src_version=target_v)
-
-    def _apply(batch: DataFrame, epoch: int, *, mode_: str, overwrite: bool = False):
-        """merge_into with twin tolerance: if a TWIN replicator (double-
-        fired cron, second mirror process) raced us past the marker check
-        and won the commit, OUR application of the epoch is redundant —
-        re-enter merge_into, which skips on the twin's marker. Anything
-        else is a genuine conflict."""
-        try:
-            return merge_into(
-                spark, dst, batch, query_id=replication_id, epoch=epoch,
-                mode=mode_, overwrite=overwrite,
-            )
-        except CommitConflictError:
-            if not dst.epoch_committed(replication_id, epoch):
-                raise
-            return merge_into(
-                spark, dst, batch, query_id=replication_id, epoch=epoch,
-                mode=mode_, overwrite=overwrite,
-            )
 
     last = last_replicated_version(dst, replication_id)
     if last is None:
         # initial sync: the whole current snapshot as one idempotent epoch
         report.initial_sync = True
-        batch = _events_from_state(
+        batch = state_events(
             src.snapshot(spark, include_deleted=True, metadata=src_meta),
-            payload,
             key_cols,
+            payload,
         )
-        report.applied_epochs.append(_apply(batch, target_v, mode_=mode))
+        report.applied_epochs.append(
+            apply_epoch(spark, dst, batch, replication_id, target_v, mode=mode)
+        )
         return report
     if last >= target_v:
         report.src_version = last
         return report  # already current
 
-    try:
-        src._raw_metadata_at(last)  # is the chain from `last` still readable?
-        spans = (
-            [(v - 1, v) for v in range(last + 1, target_v + 1)]
-            if every_version
-            else [(last, target_v)]
-        )
-    except ValueError:
-        spans = None  # vacuumed past the replica — repair below
-
-    if spans is None:
-        # REPAIR epoch: state-based diff (catches same-seq payload
-        # divergence and tombstone drift) applied with overwrite=True, so
-        # the replica is forced to the source's exact rows AND seqs no
-        # matter how high an out-of-band write's seq was. Overwrite
-        # requires the COW path regardless of the steady-state mode.
+    if not chain_intact(src, last):
+        # REPAIR epoch (feed.repair_epoch): the replica is forced to the
+        # source's exact rows AND seqs, whatever the steady-state mode
         report.resync = True
-        src_snap = src.snapshot(spark, include_deleted=True, metadata=src_meta)
-        # replica side: keys + engine columns suffice ONLY when content_sha
-        # witnesses the whole payload (payload == {content}); otherwise the
-        # payload itself must be read so the repair diff can see same-seq
-        # divergence in non-content columns (diff_frames repair basis)
-        dst_snap = dst.snapshot(
-            spark, include_deleted=True,
-            columns=[] if set(payload) == {"content"} else None,
-        )
-        diff = diff_frames(
-            dst_snap, src_snap, key_cols, payload,
-            full_rows=True, repair=True,
-        )
-        report.applied_epochs.append(
-            _apply(
-                _events_from_diff(diff, payload, key_cols),
-                target_v,
-                mode_="cow",
-                overwrite=True,
-            )
-        )
+        report.applied_epochs.append(repair_epoch(
+            spark, dst,
+            src.snapshot(spark, include_deleted=True, metadata=src_meta),
+            key_cols, payload, replication_id, target_v,
+        ))
         return report
 
+    spans = (
+        [(v - 1, v) for v in range(last + 1, target_v + 1)]
+        if every_version
+        else [(last, target_v)]
+    )
     for lo, hi in spans:
         if dst.epoch_committed(replication_id, hi):
             continue  # a crashed previous run already landed this span
@@ -261,14 +182,13 @@ def replicate(
         # full rationale). Event-driven spans are unaffected (seqs always
         # advance). MOR destinations cannot express non-advancing updates:
         # with mode='mor', such a row raises INSIDE the merge job
-        # (derive._guarded_seq) — resync() or a cow destination is the
+        # (feed._guarded_seq) — resync() or a cow destination is the
         # remedy, never an arbitrary same-seq tie.
-        report.applied_epochs.append(
-            _apply(
-                _events_from_diff(
-                    diff, span_payload, key_cols, mor_guard=(mode == "mor")
-                ),
-                hi, mode_=mode, overwrite=(mode == "cow"),
-            )
+        events = _events_from_diff(
+            diff, span_payload, key_cols, mor_guard=(mode == "mor")
         )
+        report.applied_epochs.append(apply_epoch(
+            spark, dst, events, replication_id, hi,
+            mode=mode, overwrite=(mode == "cow"),
+        ))
     return report

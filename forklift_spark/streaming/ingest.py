@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..lakette.table import LaketteTable
+from ..operators.feed import open_or_create
 from ..operators.merge import MergeStats, merge_into
 
 CHANGELOG_SCHEMA = T.StructType(
@@ -74,15 +75,7 @@ def create_entity_table(
 
 
 def open_or_create_entity_table(root: str, n_buckets: int = 16) -> LaketteTable:
-    if LaketteTable.exists(root):
-        return LaketteTable(root)
-    from ..lakette.table import CommitConflictError
-
-    try:
-        return create_entity_table(root, n_buckets=n_buckets)
-    except CommitConflictError:
-        # lost the create race to a twin process — its table is ours too
-        return LaketteTable(root)
+    return open_or_create(root, lambda: create_entity_table(root, n_buckets=n_buckets))
 
 
 @dataclass

@@ -187,6 +187,27 @@ def test_spec_guard_and_force_resync(spark, src, tmp_path):
     assert _postings(spark, idx_root) == _expected_postings(spark, src, "lang")
 
 
+def test_vacuum_broken_chain_resyncs(spark, src, tmp_path):
+    """Source vacuumed past the index's offset -> one repair epoch: the
+    index equals a full rebuild, including the retraction of postings
+    whose rows moved or died while the chain was broken."""
+    idx_root = str(tmp_path / "idx")
+    derive_index(spark, src, idx_root, "commit", derive_id="i")
+    for e in range(1, 4):
+        _apply(spark, src, [
+            _ev("U", 1000 * e + i, f"r{i % 3}", f"f/{i}.txt", f"wave{e}")
+            for i in range(0, 20, 5)
+        ] + [_ev("D", 1000 * e + 99, f"r{e % 3}", f"f/{e}.txt", None,
+                 lang=None, content=None)], e)
+    src.vacuum(keep_versions=1, grace_seconds=0)
+    r = derive_index(spark, src, idx_root, "commit", derive_id="i")
+    assert r.resync
+    assert _postings(spark, idx_root) == _expected_postings(spark, src, "commit")
+    rebuilt = str(tmp_path / "rebuilt")
+    derive_index(spark, src, rebuilt, "commit", derive_id="i")
+    assert _postings(spark, idx_root) == _postings(spark, rebuilt)
+
+
 def test_crash_replay_is_exactly_once(spark, src, tmp_path):
     idx_root = str(tmp_path / "idx")
     derive_index(spark, src, idx_root, "commit", derive_id="i")

@@ -23,6 +23,7 @@ from forklift_spark.lakette.table import (
     LaketteTable,
     _MANIFEST_CACHE,
 )
+from forklift_spark.operators.feed import last_replicated_version
 
 SCHEMA = T.StructType(
     [
@@ -211,6 +212,22 @@ def test_delayed_visibility_commit_is_protected_by_grace():
     assert all(fs.exists(k) for k in shard)
     fs.settle()
     assert tbl._raw_current()["version"] == 2
+
+
+def test_last_replicated_version_reads_markers_through_storage(tbl):
+    """A feed's offset is its highest epoch marker, read through the
+    table's storage like every other marker access: once another writer
+    has committed, the marker alone carries the offset."""
+    base = tbl._raw_current()["version"]
+    c = tbl.commit_version(new_files=[_mk("a", 0)], replaced_buckets={0},
+                           writer={"query_id": "q", "epoch": 0},
+                           base_version=base)
+    tbl.write_epoch_marker("q", 0, c.snapshot_id)
+    tbl.commit_version(new_files=[_mk("b", 1)], replaced_buckets={1},
+                       writer={"query_id": "other", "epoch": 0},
+                       base_version=c.version)
+    assert last_replicated_version(tbl, "q") == 0
+    assert last_replicated_version(tbl, "nobody") is None
 
 
 def test_expire_epochs_bounds_marker_population(tbl):
