@@ -444,17 +444,19 @@ def derive_join(
     if td > ld:
         span_d = snapshot_diff(spark, dim, ld, td)
         changed = span_d.select(*dim_keys).distinct()
-        n_changed = changed.count()
-        report.dim_changed_keys = int(n_changed)
-        if n_changed > 0:
-            if (
-                n_changed <= reverse_lookup_max_keys and len(dim_keys) == 1
-            ):
+        # one bounded collect yields the changed keys and, within the
+        # bound, their exact count; past it, count() gives the count
+        cap = max(reverse_lookup_max_keys, 0)
+        head = changed.limit(cap + 1).collect()
+        within = len(head) <= cap
+        report.dim_changed_keys = len(head) if within else int(changed.count())
+        if head:
+            if within and len(dim_keys) == 1:
                 # pruned point-lookup path: push the changed keys into the
                 # snapshot as col_eq IN-set — bloom file pruning (declare
                 # the fk in the fact's bloom_cols) + exact row filter
                 report.dim_refresh_path = "pruned"
-                keys = [r[0] for r in changed.collect()]
+                keys = [r[0] for r in head]
                 affected = fact.snapshot(
                     spark, metadata=fact_meta,
                     col_eq={fk_cols[0]: keys},

@@ -1,5 +1,6 @@
-"""PySpark's Python worker daemon (`pyspark.daemon`) for the test session,
-with one per-task interpreter cost taken out.
+"""The Python worker daemon of every `get_spark` session: pyspark's own
+daemon (`pyspark.daemon.manager`), with one per-task interpreter cost
+taken out.
 
 Every Python-worker task calls `importlib.invalidate_caches()` (pyspark's
 `worker_util.setup_spark_files`). Before CPython 3.12, that makes every
@@ -10,9 +11,16 @@ per task on a 4-vCPU VM, paid by every `mapInArrow` writer task. Here
 an archive's directory is re-read only when the archive changed on disk
 (mtime or size), so a new or replaced zip is still seen; the cached
 directory is the one an unchanged archive would be re-read into.
+CPython 3.12 made that re-read lazy (at the archive's next import lookup),
+and there the daemon leaves zipimport alone.
 
-tests/conftest.py runs the session's workers under this module
-(`spark.python.daemon.module`)."""
+`session.get_spark` sets `spark.python.daemon.module` to this module and
+puts the directory holding `forklift_spark` (a `--py-files` zip, when
+the package was imported from one) on `spark.executorEnv.PYTHONPATH`.
+Executors must be able to import `forklift_spark` when the daemon starts;
+the merge writer's closures import `forklift_spark.lakette.bloom` on the
+executors anyway, so a cluster ships the package with `--py-files`.
+Importing this module patches nothing; the daemon's entry point does."""
 
 import os
 import sys
@@ -42,8 +50,7 @@ def _patch_zipimport() -> None:
     zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
-if sys.version_info < (3, 12):
-    _patch_zipimport()
-
 if __name__ == "__main__":
+    if sys.version_info < (3, 12):
+        _patch_zipimport()
     daemon.manager()

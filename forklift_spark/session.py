@@ -12,6 +12,11 @@ import os
 
 from pyspark.sql import SparkSession
 
+_PYTHONPATH = "spark.executorEnv.PYTHONPATH"
+# the directory `import forklift_spark` resolved from: a checkout, a
+# site-packages directory, or the `--py-files` zip itself
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "forklift-spark",
@@ -23,6 +28,16 @@ def get_spark(
     """Build (or fetch) a SparkSession with engine defaults.
 
     cores: int N -> local[N]; "*" -> local[*]; None -> $SPARK_GRAFT_CPUS or "*".
+
+    Python workers run under `forklift_spark.pyworker`
+    (`spark.python.daemon.module`): pyspark's own daemon, which on
+    CPython < 3.12 re-reads a zip archive's directory (`pyspark.zip`)
+    only when the archive changed, instead of once per task. The
+    directory holding `forklift_spark` (the `--py-files` zip, when the
+    package was imported from one) goes first on
+    `spark.executorEnv.PYTHONPATH`, ahead of any value `extra_conf` gives
+    that key; on a cluster, executors must be able to import
+    `forklift_spark` when the daemon starts.
     """
     if cores is None:
         cores = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -51,8 +66,13 @@ def get_spark(
         # rate-limited streams over many small segments
         .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "100000")
         .config("spark.driver.memory", driver_memory or os.environ.get("SPARK_DRIVER_MEM", "8g"))
+        .config("spark.python.daemon.module", "forklift_spark.pyworker")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    conf[_PYTHONPATH] = os.pathsep.join(
+        filter(None, (_PACKAGE_PARENT, conf.get(_PYTHONPATH)))
+    )
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

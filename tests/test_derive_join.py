@@ -145,7 +145,36 @@ def test_lookup_paths_agree(spark, tmp_path):
         r = derive_join(spark, fact, dim, dst_root, ON, MAPPING,
                         reverse_lookup_max_keys=cap)
         assert r.dim_refresh_path == expected_path
+        assert r.dim_changed_keys == 1
         assert _live(spark, LaketteTable(dst_root)) == _expected(spark, fact, dim)
+
+
+def test_dim_refresh_collects_changed_keys_once(spark, tmp_path):
+    """A one-key dim update's refresh diffs the dim span for one bounded
+    collect that yields both the changed keys and their count, not for a
+    count() and then a collect()."""
+    import uuid
+
+    fact, dim = _tables(tmp_path, bloom_cols=["fk"])
+    _seed(spark, fact, dim)
+    dst_root = str(tmp_path / "dst")
+    derive_join(spark, fact, dim, dst_root, ON, MAPPING)
+    _dmerge(spark, dim, [("U", "py", "python3", "script", 4)], 1)
+
+    sc = spark.sparkContext
+    group = f"dj-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "derive_join dim refresh")
+    try:
+        r = derive_join(spark, fact, dim, dst_root, ON, MAPPING)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert r.dim_refresh_path == "pruned" and r.dim_changed_keys == 1
+    assert _live(spark, LaketteTable(dst_root)) == _expected(spark, fact, dim)
+    # 18 jobs in all; running the diff for count() and again for the
+    # keys' collect() took 23
+    assert n_jobs <= 18, n_jobs
 
 
 def test_inner_join_semantics(spark, tmp_path):
