@@ -1381,10 +1381,12 @@ class LaketteTable:
         current-spec buckets, so mid-migration a file-level prune alone
         would surface sibling buckets' rows (possibly stale ones when the
         siblings' delta files were pruned away); a row-level
-        hash-bucket filter removes them. Internal whole-file rewriters
-        (merge COW, compact) pass False — they must see and re-emit every
-        row of the old-spec files they replace. No-op outside a
-        migration (single spec => file-level pruning is already exact).
+        hash-bucket filter removes them. Its one internal user,
+        operators/merge.py `_rewrite_groups` (the group rewrite of COW
+        merge, compact and predicate DML), passes False — it must see and
+        re-emit every row of the old-spec files it replaces. No-op
+        outside a migration (single spec => file-level pruning is already
+        exact).
 
         `col_ranges={"lang": (lo, hi)}` prunes files by the per-column
         min/max stats the writer records for the table's `stats_cols`

@@ -139,11 +139,14 @@ def _dim_frame(
     prefix: str,
     *,
     keys_filter: DataFrame | None = None,
+    col_eq: dict | None = None,
 ) -> DataFrame:
     """Live dimension rows: key columns renamed under `_DK` (dropped
     after the join), payload columns renamed under `prefix`.
-    `keys_filter` restricts to the changed-key tuples (small side)."""
-    d = dim.snapshot(spark, metadata=dim_meta)
+    `keys_filter` restricts to the changed-key tuples (small side);
+    `col_eq` restricts to collected key values inside the snapshot read
+    (bloom pruning plus an exact row filter, see LaketteTable.snapshot)."""
+    d = dim.snapshot(spark, metadata=dim_meta, col_eq=col_eq)
     dim_keys = list(dim_meta["key_cols"])
     if keys_filter is not None:
         d = d.join(keys_filter, on=dim_keys, how="left_semi")
@@ -461,6 +464,12 @@ def derive_join(
                     spark, metadata=fact_meta,
                     col_eq={fk_cols[0]: keys},
                 )
+                # the collected keys, not the `changed` frame: a semi-join
+                # against it would run the dim diff again inside the merge
+                d_changed = _dim_frame(
+                    spark, dim, dim_meta, dim_prefix,
+                    col_eq={dim_keys[0]: keys},
+                )
             else:
                 # distributed fallback: semi-join the live fact against
                 # the changed-key frame — O(fact scan), one shuffle,
@@ -472,11 +481,11 @@ def derive_join(
                     ),
                     on=fk_cols, how="left_semi",
                 )
+                d_changed = _dim_frame(
+                    spark, dim, dim_meta, dim_prefix, keys_filter=changed
+                )
             if span_keys is not None:
                 affected = affected.join(span_keys, on=key_cols, how="left_anti")
-            d_changed = _dim_frame(
-                spark, dim, dim_meta, dim_prefix, keys_filter=changed
-            )
             joined = affected.join(
                 d_changed, on=_join_cond(fk_cols, dim_keys), how="left"
             )

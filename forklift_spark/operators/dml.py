@@ -8,10 +8,13 @@ Execution shape, built for 100 TB:
      referenced columns + keys, filter pushed to parquet) finds the DISTINCT
      hash buckets holding matching live rows. Cost: one narrow scan; result
      is bounded by n_buckets.
-  2. REWRITE — only the touched buckets are read back (resolved through the
-     ordinary merge-on-read snapshot, so pending deltas fold in exactly like
-     compact) and rewritten copy-on-write with the transform applied. Cost:
-     O(touched buckets), never O(table).
+  2. REWRITE — the touched buckets' key groups go through the engine's one
+     group rewrite (merge._rewrite_groups), the same one compact runs, with
+     the transform as its shaping step: read back through the ordinary
+     merge-on-read snapshot (pending deltas fold in), tagged, transformed,
+     written as base files in the table's layout. Mid-rescale the groups'
+     old-spec files are replaced too. Cost: O(touched buckets), never
+     O(table).
   3. COMMIT — the standard CAS commit with base-snapshot validation: a
      concurrent writer that touched an overlapping bucket surfaces as
      CommitConflictError (re-run the DML), never a lost update. The writer
@@ -43,8 +46,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..lakette.table import LaketteTable
-from ..lakette.table import _specs as _meta_specs
-from .merge import _write_colmap, _base_layout, _obs_count, _write_datafiles
+from .merge import _enforce_constraints, _obs_count, _rewrite_groups
 
 #: engine-maintained physical columns a SET clause may never assign
 _ENGINE_COLS = {"seq", "content_sha", "deleted", "col_seqs"}
@@ -77,7 +79,7 @@ def _discover_touched(
     snap = table.snapshot(spark, metadata=meta, columns=payload_needed)
     rows = (
         snap.filter(F.expr(predicate))
-        .select(table.bucket_expr().alias("b"))
+        .select(table.bucket_expr(metadata=meta).alias("b"))
         .distinct()
         .collect()
     )
@@ -88,65 +90,45 @@ def _rewrite_buckets(
     spark: SparkSession,
     table: LaketteTable,
     meta: dict,
-    touched: list[int],
     predicate: str,
     transform,
     op_name: str,
 ) -> dict:
-    """Steps 2+3: COW-rewrite the touched buckets with `transform(df,
-    match_col)` applied, commit with base validation. Mirrors compact()'s
-    read/write/commit shape (whole-group replace, old specs included
-    mid-rescale), so pending MOR deltas of the touched buckets fold into
+    """Steps 1-3: discovery, then the group rewrite (merge._rewrite_groups)
+    of the touched buckets with `transform(df, match_col)` as its shaping
+    step, then the commit with base validation; a no-match predicate
+    commits nothing. Pending MOR deltas of the touched buckets fold into
     clean base files as a side effect."""
-    snap = table.snapshot(
-        spark, include_deleted=True, buckets=touched, metadata=meta,
-        exact_buckets=False,
-    )
-    live = ~F.coalesce(F.col("deleted"), F.lit(False))
-    # NULL predicate result = no match (SQL WHERE semantics), and tombstones
-    # are never matched — their NULL payloads must stay tombstones
-    match = live & F.coalesce(F.expr(predicate), F.lit(False))
-    tagged = snap.withColumn("_match", match)
+    touched = _discover_touched(spark, table, meta, predicate)
+    if not touched:
+        return {
+            "version": meta["version"], "touched_buckets": 0,
+            "rows_scanned": 0, "rows_matched": 0,
+        }
     obs = Observation(f"dml-{op_name}")
-    tagged = tagged.observe(
-        obs,
-        F.count(F.lit(1)).alias("rows"),
-        F.sum(F.col("_match").cast("long")).alias("matched"),
-    )
-    out = transform(tagged, F.col("_match")).drop("_match")
-    out = out.withColumn("_bucket", table.bucket_expr())
 
-    # table CHECK constraints (lakette/table.py add_constraint) bind every
-    # writer: the UPDATE's post-image rows must satisfy them BEFORE any
-    # file is written — deletes are exempt (tombstones have no post-image).
-    # One bounded aggregate over the touched buckets, only when
-    # constraints are declared; the batch aborts whole on a violation.
-    constraints = meta.get("constraints") or {}
-    if constraints and op_name == "update":
-        from .expectations import Expectation, enforce
-
-        enforce(
-            out.filter(~F.coalesce(F.col("deleted"), F.lit(False))),
-            [Expectation(n, e, action="fail")
-             for n, e in sorted(constraints.items())],
+    def shape(snap: DataFrame) -> DataFrame:
+        live = ~F.coalesce(F.col("deleted"), F.lit(False))
+        # NULL predicate result = no match (SQL WHERE semantics), and
+        # tombstones are never matched — their NULL payloads must stay
+        # tombstones
+        match = live & F.coalesce(F.expr(predicate), F.lit(False))
+        tagged = snap.withColumn("_match", match).observe(
+            obs,
+            F.count(F.lit(1)).alias("rows"),
+            F.sum(F.col("_match").cast("long")).alias("matched"),
         )
+        out = transform(tagged, F.col("_match")).drop("_match")
+        out = out.withColumn("_bucket", table.bucket_expr(metadata=meta))
+        if op_name == "update":
+            # CHECK constraints bind every writer: the UPDATE's post-image
+            # rows must satisfy them before any file is written
+            _enforce_constraints(meta, out, live)
+        return out
 
-    new_files = _write_datafiles(
-        out,
-        root=table.root,
-        snapshot_id=meta["snapshot_id"] + 1,
-        delta=False,
-        n_partitions=max(1, len(touched)),
-        key_col=meta["key_cols"][0],
-        # rewritten buckets keep the table's declared linear cluster order
-        # (merge._base_layout) — DML must not degrade the read layout
-        sort_cols=_base_layout(meta)[0],
-        max_rows_per_file=meta.get("target_file_rows"),
-        stats_cols=_base_layout(meta)[1],
-        bloom_cols=meta.get("bloom_cols"),
-        colmap=_write_colmap(meta, out),
+    new_files, replaced = _rewrite_groups(
+        spark, table, meta, touched, shape, n_partitions=len(touched)
     )
-    replaced = {(nb, b % nb) for nb in _meta_specs(meta) for b in touched}
     commit = table.commit_version(
         new_files=new_files,
         replaced_buckets=replaced,
@@ -185,12 +167,6 @@ def delete_where(
     rows_matched}; a no-match predicate commits nothing."""
     meta = table._raw_current()
     _check_table(table, meta)
-    touched = _discover_touched(spark, table, meta, predicate)
-    if not touched:
-        return {
-            "version": meta["version"], "touched_buckets": 0,
-            "rows_scanned": 0, "rows_matched": 0,
-        }
     schema = T.StructType.fromJson(meta["schema"])
     types = {f.name: f.dataType for f in schema.fields}
     from ..lakette.table import META_COL_NAMES
@@ -214,9 +190,7 @@ def delete_where(
             "deleted", F.coalesce(F.col("deleted"), F.lit(False)) | m
         )
 
-    return _rewrite_buckets(
-        spark, table, meta, touched, predicate, _to_tombstone, "delete"
-    )
+    return _rewrite_buckets(spark, table, meta, predicate, _to_tombstone, "delete")
 
 
 def update_where(
@@ -245,12 +219,6 @@ def update_where(
     unknown = set(set_exprs) - {f.name for f in schema.fields}
     if unknown:
         raise ValueError(f"update_where: unknown columns {sorted(unknown)}")
-    touched = _discover_touched(spark, table, meta, predicate)
-    if not touched:
-        return {
-            "version": meta["version"], "touched_buckets": 0,
-            "rows_scanned": 0, "rows_matched": 0,
-        }
 
     def _apply_set(df: DataFrame, m) -> DataFrame:
         # all assignments evaluate against the OLD row: compute the new
@@ -273,6 +241,4 @@ def update_where(
                 sel.append(F.col(c))
         return df.select(*sel)
 
-    return _rewrite_buckets(
-        spark, table, meta, touched, predicate, _apply_set, "update"
-    )
+    return _rewrite_buckets(spark, table, meta, predicate, _apply_set, "update")

@@ -11,6 +11,14 @@
                interleaving), additive schema evolution in the same epoch,
                idempotent epoch markers (exactly-once), and per-partition
                lineage rows.
+  _rewrite_groups
+               the one key-group rewrite: read every row of the touched
+               groups, shape them (the copy-on-write fold, compact's
+               tombstone filter, predicate DML's tag+transform), write them
+               as base files and name the (spec, bucket) pairs they replace
+  _commit_epoch
+               the one exactly-once epoch tail of both merge modes: stage
+               or commit, then lineage, then the epoch marker
 
 Scale design notes (the 100 TB story):
   * A copy-on-write epoch only ever reads the hash buckets the batch
@@ -256,6 +264,28 @@ def _schema_evolve(table_schema: T.StructType, batch_schema: T.StructType,
     return T.StructType(body + meta_tail), changes
 
 
+#: mode="auto" appends merge-on-read deltas when the touched key groups hold
+#: more than this many times the batch's rows (measured: BENCH/AUTO_MODE.md)
+AUTO_COW_FACTOR = 4.0
+
+
+def _enforce_constraints(meta: dict, rows: DataFrame, live) -> None:
+    """Table CHECK constraints (lakette/table.py add_constraint) over the
+    `live` rows a write is about to commit — tombstones are exempt (they
+    have no post-image). ONE bounded aggregate, paid only when constraints
+    are declared; the write aborts whole, before any file is written, on
+    the first violating rule (ExpectationError with per-rule counts)."""
+    constraints = meta.get("constraints") or {}
+    if constraints:
+        from .expectations import Expectation, enforce
+
+        enforce(
+            rows.filter(live),
+            [Expectation(n, e, action="fail")
+             for n, e in sorted(constraints.items())],
+        )
+
+
 def _touched_group_rows(table: LaketteTable, meta: dict, touched: list[int]) -> int:
     """Existing rows in the KEY GROUPS a batch touches, from the version
     file's maintained per-bucket counters alone (zero manifest loads) —
@@ -282,7 +312,6 @@ def merge_into(
     salt_buckets: int | None = None,
     src_offsets: tuple[int, int] | None = None,
     mode: str = "cow",
-    auto_cow_factor: float = 4.0,
     auto_prev: "MergeStats | None" = None,
     dedupe_in_batch: bool = True,
     overwrite: bool = False,
@@ -345,7 +374,7 @@ def merge_into(
     path.
     mode="auto": decide PER EPOCH before any heavy work, against the
     maintained per-bucket counters (zero manifest loads): merge-on-read
-    when the touched key groups hold more than `auto_cow_factor` x the
+    when the touched key groups hold more than AUTO_COW_FACTOR x the
     batch's rows (small update against a big table — appending beats
     rewriting), copy-on-write otherwise (bulk load / young table / hot
     groups — one proportionate rewrite keeps the table read-optimized).
@@ -404,21 +433,8 @@ def merge_into(
     meta = table._raw_current()
     key_cols = list(meta["key_cols"])
 
-    # --- table CHECK constraints (lakette/table.py add_constraint):
-    # enforced on every full-row event BEFORE any write — deletes are
-    # exempt (a tombstone has no post-image), and the whole batch aborts
-    # on the first violating rule (ExpectationError with per-rule
-    # counts). Cost: ONE bounded aggregate over the batch, paid only
-    # when constraints are declared; zero otherwise.
-    constraints = meta.get("constraints") or {}
-    if constraints:
-        from .expectations import Expectation, enforce
-
-        enforce(
-            batch_df.filter(F.col("op") != F.lit("D")),
-            [Expectation(n, e, action="fail")
-             for n, e in sorted(constraints.items())],
-        )
+    # --- table CHECK constraints on every full-row event, before any write
+    _enforce_constraints(meta, batch_df, F.col("op") != F.lit("D"))
 
     # partial-update semantics (operators/patch.py): tables created with
     # column_lww=True resolve merges PER COLUMN ('P' events write only
@@ -482,8 +498,10 @@ def merge_into(
             counts = _bucket_counts(batch_df, bucket)
             in_rows, touched = sum(counts.values()), list(counts)
         existing_rows = _touched_group_rows(table, meta, touched)
-        mode = "mor" if existing_rows > auto_cow_factor * max(in_rows, 1) else "cow"
+        mode = "mor" if existing_rows > AUTO_COW_FACTOR * max(in_rows, 1) else "cow"
 
+    new_files: list[dict] = []
+    replaced: set[tuple[int, int]] = set()
     if mode == "mor":
         batch, obs_in = _mor_batch(
             batch_df, key_cols, payload_cols, types,
@@ -491,98 +509,45 @@ def merge_into(
             dedupe=dedupe_in_batch, salt_buckets=salt_buckets,
         )
         stats.mode_used = "mor"
-        stats = _merge_mor(
+        new_files = _merge_mor(
             table, batch.withColumn("_bucket", bucket), stats,
-            query_id=query_id, epoch=epoch, new_schema=new_schema,
-            src_offsets=src_offsets, meta=meta, obs_in=obs_in,
-            publish=publish,
-        )
-        stats.wall_sec = round(time.monotonic() - t_start, 3)
-        _write_metrics(table, query_id, stats)
-        return stats
-
-    # --- copy-on-write: one bucket-partitioned LWW fold of the touched
-    # buckets' stored rows and the raw batch events (_cow_fold). The fold's
-    # exchange is by bucket and the argmax resolves a hot key inside its
-    # bucket's partition, so COW epochs never salt.
-    stats.mode_used = "cow"
-    stats.salt_buckets = None
-    if counts is None:
-        counts = _bucket_counts(batch_df, bucket)
-    touched = sorted(counts)
-    stats.touched = touched
-    stats.touched_buckets = len(touched)
-    new_files: list[dict] = []
-    if touched:
-        # read only the touched buckets of the current snapshot (pruned
-        # scan; ref-level manifest pruning — only touched shards are
-        # opened). exact_buckets=False: mid-rescale this COW rewrite must
-        # see and re-emit EVERY row of the old-spec files it replaces
-        # (sibling buckets' rows included — that is how COW epochs migrate
-        # groups)
-        stored = table.snapshot(
-            spark, include_deleted=True, buckets=touched, metadata=meta,
-            exact_buckets=False,
-        )
-        obs = Observation(f"merge-{query_id}-{epoch}")
-        folded = _cow_fold(
-            stored, batch_df, obs,
-            key_cols=key_cols, payload_cols=payload_cols, types=types,
-            bucket=bucket, n_partitions=len(touched), column_lww=column_lww,
-            overwrite=overwrite,
-        )
-        # executors write final-named files + report manifests. The fold's
-        # output is already partitioned by _bucket into len(touched)
-        # partitions and ordered by (_bucket, *key_cols), so the writer's
-        # repartition and (key-order) sort plan away: one exchange per epoch
-        new_files = _write_datafiles(
-            folded,
-            root=table.root,
-            snapshot_id=meta["snapshot_id"] + 1,
-            delta=False,
-            n_partitions=len(touched),
-            key_col=key_cols[0],
-            # COW rewrites whole buckets: base files come out in the
-            # table's declared linear cluster order (keys as tie-break) —
-            # or plain key-sorted without one (_base_layout)
-            sort_cols=_base_layout(meta)[0],
-            max_rows_per_file=meta.get("target_file_rows"),
-            stats_cols=_base_layout(meta)[1],
-            bloom_cols=meta.get("bloom_cols"),
-            colmap=_write_colmap(meta, folded),
-        )
-        stats.batch_rows = _obs_count(obs, "rows_in")
-        stats.rows_rewritten = _obs_count(obs, "rows")
-        stats.applied_rows = _obs_count(obs, "applied")
-        stats.key_skew = round(float(_obs_value(obs, "skew")), 2)
-
-    # --- atomic metadata commit, then marker (C6 ordering); the base
-    # version pins the snapshot this merge actually read, so an
-    # interleaving writer can never be silently overwritten.
-    # Replacement is expressed per (spec, bucket): during an online
-    # rescale the pruned read above also pulled the OLD-spec files the
-    # touched keys live in, every row read was re-emitted under the
-    # current spec, so those old files are replaced too — COW epochs
-    # migrate the groups they touch as a side effect.
-    replaced = {(nb, b % nb) for nb in _specs(meta) for b in touched}
-    if not publish:
-        stats.stage_id = table.stage_commit(
-            new_files=new_files,
-            replaced_buckets=replaced,
-            schema=new_schema,
-            writer={"query_id": query_id, "epoch": epoch},
+            name=f"mor-{query_id}-{epoch}", meta=meta, obs_in=obs_in,
         )
     else:
-        commit = table.commit_version(
-            new_files=new_files,
-            replaced_buckets=replaced,
-            schema=new_schema,
-            writer={"query_id": query_id, "epoch": epoch},
-            base_version=meta["version"],
-        )
-        stats.version, stats.snapshot_id = commit.version, commit.snapshot_id
-        _write_lineage(table, query_id, epoch, commit.snapshot_id, new_files, stats, src_offsets)
-        table.write_epoch_marker(query_id, epoch, commit.snapshot_id)
+        # --- copy-on-write: the touched groups rewritten as one
+        # bucket-partitioned LWW fold of their stored rows and the raw
+        # batch events (_cow_fold). The fold's exchange is by bucket and
+        # the argmax resolves a hot key inside its bucket's partition, so
+        # COW epochs never salt.
+        stats.mode_used = "cow"
+        stats.salt_buckets = None
+        if counts is None:
+            counts = _bucket_counts(batch_df, bucket)
+        touched = sorted(counts)
+        stats.touched = touched
+        stats.touched_buckets = len(touched)
+        if touched:
+            obs = Observation(f"merge-{query_id}-{epoch}")
+            new_files, replaced = _rewrite_groups(
+                spark, table, meta, touched,
+                lambda stored: _cow_fold(
+                    stored, batch_df, obs,
+                    key_cols=key_cols, payload_cols=payload_cols, types=types,
+                    bucket=bucket, n_partitions=len(touched),
+                    column_lww=column_lww, overwrite=overwrite,
+                ),
+                n_partitions=len(touched),
+            )
+            stats.batch_rows = _obs_count(obs, "rows_in")
+            stats.rows_rewritten = _obs_count(obs, "rows")
+            stats.applied_rows = _obs_count(obs, "applied")
+            stats.key_skew = round(float(_obs_value(obs, "skew")), 2)
+
+    _commit_epoch(
+        table, meta, stats, new_files, replaced, query_id=query_id,
+        epoch=epoch, new_schema=new_schema, src_offsets=src_offsets,
+        publish=publish,
+    )
     stats.wall_sec = round(time.monotonic() - t_start, 3)
     _write_metrics(table, query_id, stats)
     return stats
@@ -751,21 +716,17 @@ def _merge_mor(
     batch: DataFrame,
     stats: MergeStats,
     *,
-    query_id: str,
-    epoch: int,
-    new_schema: T.StructType,
-    src_offsets: tuple[int, int] | None,
+    name: str,
     meta: dict,
     obs_in: Observation,
-    publish: bool = True,
-) -> MergeStats:
+) -> list[dict]:
     """Merge-on-read epoch: ONE Spark job — append the batch's physical
-    rows (_mor_batch) as bucket-partitioned delta files. No snapshot
-    read, no join, no rewrite. A deduped batch's per-key event counts
-    (`_n`) are observed as `key_skew`, the signal adaptive salting
-    reads."""
+    rows (_mor_batch) as bucket-partitioned delta files; returns their
+    manifest entries. No snapshot read, no join, no rewrite. A deduped
+    batch's per-key event counts (`_n`) are observed as `key_skew`, the
+    signal adaptive salting reads."""
     key_cols = meta["key_cols"]
-    obs = Observation(f"mor-{query_id}-{epoch}")
+    obs = Observation(name)
     skew = (
         [(F.max("_n") / F.avg("_n")).alias("skew")] if "_n" in batch.columns else []
     )
@@ -794,26 +755,43 @@ def _merge_mor(
         stats.key_skew = round(float(_obs_value(obs, "skew")), 2)
     stats.touched = sorted({f["bucket"] for f in new_files})
     stats.touched_buckets = len(stats.touched)
+    return new_files
 
+
+def _commit_epoch(
+    table: LaketteTable,
+    meta: dict,
+    stats: MergeStats,
+    new_files: list[dict],
+    replaced: set[tuple[int, int]],
+    *,
+    query_id: str,
+    epoch: int,
+    new_schema: T.StructType,
+    src_offsets: tuple[int, int] | None,
+    publish: bool,
+) -> None:
+    """The exactly-once tail of every merge epoch, either mode (C6
+    ordering): the atomic metadata commit, then lineage, then the epoch
+    marker — so a crash before the marker leaves a committed epoch the
+    gate in merge_into recognises by its writer stamp. The base version
+    pins the snapshot this merge actually read, so an interleaving writer
+    can never be silently overwritten. `publish=False` stages the payload
+    instead (write-audit-publish) and sets `stats.stage_id`."""
+    writer = {"query_id": query_id, "epoch": epoch}
     if not publish:
         stats.stage_id = table.stage_commit(
-            new_files=new_files,
-            replaced_buckets=set(),
-            schema=new_schema,
-            writer={"query_id": query_id, "epoch": epoch},
+            new_files=new_files, replaced_buckets=replaced,
+            schema=new_schema, writer=writer,
         )
-        return stats
+        return
     commit = table.commit_version(
-        new_files=new_files,
-        replaced_buckets=set(),
-        schema=new_schema,
-        writer={"query_id": query_id, "epoch": epoch},
-        base_version=meta["version"],
+        new_files=new_files, replaced_buckets=replaced, schema=new_schema,
+        writer=writer, base_version=meta["version"],
     )
     stats.version, stats.snapshot_id = commit.version, commit.snapshot_id
     _write_lineage(table, query_id, epoch, commit.snapshot_id, new_files, stats, src_offsets)
     table.write_epoch_marker(query_id, epoch, commit.snapshot_id)
-    return stats
 
 
 def select_compaction_candidates(
@@ -936,19 +914,6 @@ def compact(
             "n_buckets": out_buckets,
             "compacted_buckets": 0,
         }
-    # exact_buckets=False: this rewrite replaces WHOLE groups (old-spec
-    # files included mid-rescale), so it must read every row of them
-    snap = table.snapshot(
-        spark, include_deleted=True, buckets=target, metadata=meta,
-        exact_buckets=False,
-    )
-    tomb = F.coalesce(F.col("deleted"), F.lit(False))
-    if drop_tombstones:
-        snap = snap.filter(~tomb)
-    elif drop_tombstones_below is not None:
-        snap = snap.filter(~(tomb & (F.col("seq") < F.lit(int(drop_tombstones_below)))))
-    merged = snap.withColumn("_bucket", table.bucket_expr(n_buckets=out_buckets))
-    snapshot_id = meta["snapshot_id"] + 1
     # partition-local sort (O2) inside the writer: compacted base files are
     # the read-optimized artifact. Default = key sort (compression +
     # row-group locality); with clustering, the declared cluster columns
@@ -977,33 +942,33 @@ def compact(
                 "strictly better — it sorts by the column directly)"
             )
     zorder = cluster if (cluster and mode == "zorder") else None
-    new_files = _write_datafiles(
-        merged,
-        root=table.root,
-        snapshot_id=snapshot_id,
-        delta=False,
-        n_partitions=out_buckets if target is None else len(target),
-        key_col=meta["key_cols"][0],
+    layout = (
         # linear: cluster cols lead the sort; zorder: the Morton key does
         # (computed in the writer), keys break ties either way
-        sort_cols=meta["key_cols"] if zorder else [*cluster, *meta["key_cols"]],
-        zorder_cols=zorder,
-        max_rows_per_file=meta.get("target_file_rows"),
+        meta["key_cols"] if zorder else [*cluster, *meta["key_cols"]],
         # cluster columns' cstats are what makes the layout useful — record
         # them even when the table's stats_cols doesn't list them
-        stats_cols=sorted({*(meta.get("stats_cols") or []), *cluster}),
-        bloom_cols=meta.get("bloom_cols"),
-        colmap=_write_colmap(meta, merged),
+        sorted({*(meta.get("stats_cols") or []), *cluster}),
+        zorder,
     )
-    n0 = _specs(meta)[0]
-    if target is None:
-        replaced = {table._ref_pair(k, n0) for k in bstats}
-    else:
-        # the pruned read above pulled every file whose key space meets the
-        # target buckets — including old-spec files mid-rescale — and all
-        # rows read were re-emitted under the output spec, so all of those
-        # files are replaced (incremental compaction doubles as migration)
-        replaced = {(nb, b % nb) for nb in _specs(meta) for b in target}
+
+    def shape(snap: DataFrame) -> DataFrame:
+        tomb = F.coalesce(F.col("deleted"), F.lit(False))
+        if drop_tombstones:
+            snap = snap.filter(~tomb)
+        elif drop_tombstones_below is not None:
+            snap = snap.filter(~(tomb & (F.col("seq") < F.lit(int(drop_tombstones_below)))))
+        return snap.withColumn(
+            "_bucket", table.bucket_expr(n_buckets=out_buckets, metadata=meta)
+        )
+
+    # incremental compaction doubles as migration: the rewrite replaces
+    # the target groups' old-spec files too (_rewrite_groups)
+    new_files, replaced = _rewrite_groups(
+        spark, table, meta, target, shape,
+        n_partitions=out_buckets if target is None else len(target),
+        layout=layout,
+    )
     commit = table.commit_version(
         new_files=new_files,
         replaced_buckets=replaced,
@@ -1019,6 +984,7 @@ def compact(
         n_buckets=out_buckets if n_buckets else None,
         base_version=meta["version"],
     )
+    n0 = _specs(meta)[0]
     replaced_n = sum(
         v[0] for k, v in bstats.items() if table._ref_pair(k, n0) in replaced
     )
@@ -1031,9 +997,65 @@ def compact(
     }
 
 
-def _base_layout(meta: dict) -> tuple[list[str], list[str]]:
-    """(sort_cols, stats_cols) for BASE-file rewrites OUTSIDE compact (COW
-    merge epochs, predicate DML): a declared LINEAR cluster order rides
+def _rewrite_groups(
+    spark: SparkSession,
+    table: LaketteTable,
+    meta: dict,
+    buckets: list[int] | None,
+    shape,
+    *,
+    n_partitions: int,
+    layout: tuple | None = None,
+) -> tuple[list[dict], set[tuple[int, int]]]:
+    """The engine's one key-group rewrite, shared by copy-on-write merge
+    epochs, compact() and predicate DML: read every row of the groups
+    `buckets` (current-spec ids; None = the whole table) touch, hand the
+    frame to `shape` (the COW fold with the batch, compaction's tombstone
+    filter, DML's tag+transform), which returns the rows to write carrying
+    `_bucket`, and write them as base files. Returns the new files'
+    manifest entries and the (spec, bucket) pairs they replace.
+
+    The read is pruned to the touched groups' files (ref-level manifest
+    pruning — only their shards are opened) with exact_buckets=False:
+    mid-rescale the rewrite must see and re-emit EVERY row of the old-spec
+    files it replaces, sibling buckets' rows included, so those files are
+    replaced too — every group rewrite migrates the groups it touches as a
+    side effect. The whole table (`buckets=None`) replaces every live
+    (spec, bucket) pair.
+
+    Files come out in the table's base layout (_base_layout) unless the
+    caller passes `layout` = (sort_cols, stats_cols, zorder_cols), as
+    compact() does for its cluster / z-order override."""
+    rows = shape(table.snapshot(
+        spark, include_deleted=True, buckets=buckets, metadata=meta,
+        exact_buckets=False,
+    ))
+    sort_cols, stats_cols, zorder_cols = layout or _base_layout(meta)
+    new_files = _write_datafiles(
+        rows,
+        root=table.root,
+        snapshot_id=meta["snapshot_id"] + 1,
+        delta=False,
+        n_partitions=n_partitions,
+        key_col=meta["key_cols"][0],
+        sort_cols=sort_cols,
+        zorder_cols=zorder_cols,
+        max_rows_per_file=meta.get("target_file_rows"),
+        stats_cols=stats_cols,
+        bloom_cols=meta.get("bloom_cols"),
+        colmap=_write_colmap(meta, rows),
+    )
+    specs = _specs(meta)
+    if buckets is None:
+        replaced = {table._ref_pair(k, specs[0]) for k in table._bucket_stats(meta)}
+    else:
+        replaced = {(nb, b % nb) for nb in specs for b in buckets}
+    return new_files, replaced
+
+
+def _base_layout(meta: dict) -> tuple[list[str], list[str], None]:
+    """(sort_cols, stats_cols, zorder_cols) for BASE-file rewrites OUTSIDE
+    compact (COW merge epochs, predicate DML): a declared LINEAR cluster order rides
     every rewrite at zero extra cost — the writer already does one
     partition-local sort, only the columns change — so clustered COW
     tables never lose their layout between compactions. Z-order stays
@@ -1046,7 +1068,7 @@ def _base_layout(meta: dict) -> tuple[list[str], list[str]]:
         else []
     )
     stats = sorted({*(meta.get("stats_cols") or []), *cluster})
-    return [*cluster, *meta["key_cols"]], stats
+    return [*cluster, *meta["key_cols"]], stats, None
 
 
 def _zorder_expr(cols: list[str], *, bits: int = 8):

@@ -1,6 +1,6 @@
 """mode="auto" vs fixed cow / fixed mor on the two steady-state workload
 shapes the per-epoch decision exists for (VERDICT r4 #6) — justify
-auto_cow_factor's default with measured numbers.
+merge.AUTO_COW_FACTOR with measured numbers.
 
 Protocol (apples to apples): every variant starts from an IDENTICAL base
 table (built untimed, copy-on-write, same data), then runs the SAME
@@ -16,7 +16,7 @@ residual delta debt. Each (workload, mode) runs in its OWN subprocess/JVM
 Workloads:
 
   bulk     bulk-rewrite-heavy: every epoch updates ~the WHOLE key space
-           (batch rows ~ touched-group rows -> auto_cow_factor says cow).
+           (batch rows ~ touched-group rows -> AUTO_COW_FACTOR says cow).
            MOR must append a table-sized delta each epoch and re-fold it
            on every read until compaction folds it again — COW's one
            proportionate rewrite is the same bytes without the debt.
@@ -218,7 +218,7 @@ def main():
         f"Protocol: deterministic changelog fixture, local[{args.cores}], "
         f"scale={args.scale}, n_buckets=32, one subprocess/JVM per "
         f"(workload, mode) — no warm-up bleed — best of {args.trials} "
-        "trials per variant, `auto_cow_factor=4.0` (the default under "
+        "trials per variant, `AUTO_COW_FACTOR=4.0` (the value under "
         "test). Every variant starts from an IDENTICAL untimed COW base "
         "load; only the workload epochs are timed, and all variants run "
         "the SAME per-epoch serving read + the SAME standard incremental-"
@@ -271,7 +271,7 @@ def main():
         "counters (zero manifest loads), so choosing per epoch costs "
         "nothing; auto must track COW on the bulk shape (no delta debt) "
         "and MOR on the trickle shape (no cold-group re-copy). "
-        "`auto_cow_factor=4.0` is the boundary: merge-on-read only when "
+        "`AUTO_COW_FACTOR=4.0` is the boundary: merge-on-read only when "
         "the touched groups hold >4x the batch's rows.",
         "",
     ]

@@ -131,33 +131,39 @@ def main() -> None:
         "data, never table size.",
     )
 
-    # COW merge epoch: the frame merge_into hands the data-file writer,
-    # with the writer's own bucket repartition + key sort applied on top
+    # the group rewrite (merge._rewrite_groups) of a COW merge epoch,
+    # compact and predicate DML: the frame each hands the data-file
+    # writer, with the writer's own bucket repartition + key sort on top
     from forklift_spark.operators import merge as merge_mod
+    from forklift_spark.operators.dml import update_where
 
-    written = []
     real_write = merge_mod._write_datafiles
 
-    def _capture(df, **kw):
-        written.append(
-            df.repartition(kw["n_partitions"], "_bucket")
-            .sortWithinPartitions("_bucket", *kw["sort_cols"])
-        )
-        return real_write(df, **kw)
+    def written(op):
+        seen = []
+
+        def _capture(df, **kw):
+            seen.append(
+                df.repartition(kw["n_partitions"], "_bucket")
+                .sortWithinPartitions("_bucket", *kw["sort_cols"])
+            )
+            return real_write(df, **kw)
+
+        merge_mod._write_datafiles = _capture
+        try:
+            op()
+        finally:
+            merge_mod._write_datafiles = real_write
+        return seen[-1]
 
     # a local batch: `upd` carries the seed's LIMIT, whose own exchange
     # is not the merge's
     batch = spark.createDataFrame(
         upd.withColumn("seq", F.col("seq") + F.lit(1)).collect(), upd.schema
     )
-    merge_mod._write_datafiles = _capture
-    try:
-        merge_into(spark, t, batch, query_id="plans", epoch=2)
-    finally:
-        merge_mod._write_datafiles = real_write
     add(
         "COW merge epoch: the write plan",
-        written[-1],
+        written(lambda: merge_into(spark, t, batch, query_id="plans", epoch=2)),
         "Expect: ONE exchange — hashpartitioning(_bucket, touched buckets) "
         "over the Union of the touched buckets' stored rows (_src=1) and the "
         "batch events in delta-row shape (_src=0, sha2 + op_guard in the "
@@ -166,6 +172,39 @@ def main() -> None:
         "rows/applied/rows_in/skew. The writer's repartition and key sort "
         "are already satisfied and plan away; no join, no "
         "InMemoryRelation (asserted in tests/test_cow_fold.py).",
+    )
+
+    # compact / update_where on their own table (a merge-on-read seed plus
+    # one delta epoch), so the plans above and below keep their inputs
+    rw_root = os.path.join(_tempfile.gettempdir(), "fk_plans_rewrite")
+    _shutil.rmtree(rw_root, ignore_errors=True)
+    rw = create_entity_table(rw_root, n_buckets=8)
+    merge_into(spark, rw, seed, query_id="plans", epoch=0, mode="mor")
+    merge_into(spark, rw, batch, query_id="plans", epoch=1, mode="mor")
+    add(
+        "Compact write plan",
+        written(lambda: merge_mod.compact(spark, rw, buckets=[0, 1])),
+        "Expect: the group rewrite with compaction's shaping step. Both "
+        "target groups hold deltas, so their rows are the snapshot's LWW "
+        "resolve (partial max_by, one hashpartitioning exchange on the "
+        "key); _bucket is projected on top and the writer's "
+        "hashpartitioning(_bucket, 2 target buckets) is the second and "
+        "last exchange, with the key sort local. Clean groups would "
+        "stream in beside it through a Union (see update_where below). No "
+        "join, no Python before the writer.",
+    )
+    add(
+        "update_where write plan",
+        written(lambda: update_where(
+            spark, rw, {"content": "upper(content)"}, "path LIKE '1%'",
+        )),
+        "Expect: the same group rewrite as compact, with DML's shaping "
+        "step: the touched groups' snapshot (the clean group's files "
+        "Union the dirty groups' LWW resolve, one exchange on the key), "
+        "the _match tag under CollectMetrics (rows/matched), the SET as "
+        "one CASE WHEN projection (content_sha recomputed by sha2), then "
+        "the writer's hashpartitioning(_bucket) exchange and a local key "
+        "sort. Cost follows the touched buckets, never the table.",
     )
 
     # 9. deterministic stratified sampling (r4): map-only training-data mix

@@ -177,6 +177,35 @@ def test_dim_refresh_collects_changed_keys_once(spark, tmp_path):
     assert n_jobs <= 18, n_jobs
 
 
+def test_dim_refresh_merge_does_not_rerun_the_dim_diff(spark, tmp_path, monkeypatch):
+    """On the pruned path the dim side of the refresh join reads the
+    collected changed keys (col_eq), so the batch handed to the merge
+    holds no span diff: snapshot_diff is a full-outer join, and every job
+    over the batch would otherwise run it again."""
+    from forklift_spark.operators import feed
+
+    fact, dim = _tables(tmp_path, bloom_cols=["fk"])
+    _seed(spark, fact, dim)
+    dst_root = str(tmp_path / "dst")
+    derive_join(spark, fact, dim, dst_root, ON, MAPPING)
+    _dmerge(spark, dim, [("U", "py", "python3", "script", 4)], 1)
+
+    batches = []
+    real = feed.merge_into
+
+    def spy(spark_, dst, batch_df, **kw):
+        batches.append(batch_df)
+        return real(spark_, dst, batch_df, **kw)
+
+    monkeypatch.setattr(feed, "merge_into", spy)
+    r = derive_join(spark, fact, dim, dst_root, ON, MAPPING)
+    assert r.dim_refresh_path == "pruned" and r.dim_changed_keys == 1
+    assert len(batches) == 1
+    plan = batches[0]._jdf.queryExecution().optimizedPlan().toString()
+    assert "FullOuter" not in plan, plan
+    assert _live(spark, LaketteTable(dst_root)) == _expected(spark, fact, dim)
+
+
 def test_inner_join_semantics(spark, tmp_path):
     fact, dim = _tables(tmp_path)
     _seed(spark, fact, dim)

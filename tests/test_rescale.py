@@ -234,3 +234,59 @@ def test_cow_sibling_rewrite_does_not_mask_newer_delta(spark, tmp_path):
     # and compaction folds the group cleanly afterwards
     compact(spark, table)
     assert _content(spark, table)[ka] == ("delta-wins", 500)
+
+
+def test_predicate_dml_migrates_touched_groups(spark, tmp_path):
+    """update_where / delete_where mid-rescale: each rewrites the key groups
+    its matches live in under the new spec (old-spec files of those groups
+    replaced, sibling rows re-emitted), and leaves every other group's
+    files alone — the state stays sha-exact against a recompute."""
+    from forklift_spark.operators.dml import delete_where, update_where
+
+    table = _seed(spark, tmp_path, n_buckets=4, n=80)
+    table.rescale(8)
+    before = _content(spark, table)
+    files_before = {f["path"]: f["bucket"] for f in table.current_metadata()["files"]}
+    n_old = table.migration_status()["files_by_spec"][4]
+
+    upd_paths, del_path = ["f3.py", "f10.py"], "f21.py"
+    group = {
+        r.path: r.b % 4
+        for r in spark.createDataFrame(
+            [(f"repo_{int(p[1:-3]) % 7}", p) for p in [*upd_paths, del_path]],
+            "repo string, path string",
+        ).select("path", table.bucket_expr().alias("b")).collect()
+    }
+    touched = set(group.values())
+    assert len(touched) < 4, "the test needs an untouched group"
+
+    res = update_where(
+        spark, table, {"content": "concat(content, '-fixed')"},
+        "path IN ('f3.py', 'f10.py')",
+    )
+    assert res["rows_matched"] == 2
+    res = delete_where(spark, table, f"path = '{del_path}'")
+    assert res["rows_matched"] == 1
+
+    expected = {
+        k: (f"{c}-fixed" if k[1] in upd_paths else c, s)
+        for k, (c, s) in before.items() if k[1] != del_path
+    }
+    assert _content(spark, table) == expected
+    exp_df = spark.createDataFrame(
+        [(r, p, c) for (r, p), (c, _) in expected.items()],
+        "repo string, path string, content string",
+    )
+    assert verify_state(spark, table, exp_df)["ok"]
+
+    files = table.current_metadata()["files"]
+    # the touched groups' old-spec files were replaced by new-spec ones...
+    assert not any(f["nb"] == 4 and f["bucket"] in touched for f in files)
+    assert {f["bucket"] % 4 for f in files if f["nb"] == 8} == touched
+    by_spec = table.migration_status()["files_by_spec"]
+    assert by_spec[4] == n_old - sum(1 for b in files_before.values() if b in touched)
+    assert by_spec[8] > 0
+    # ...and every untouched group's files are the very same files
+    untouched = {p for p, b in files_before.items() if b not in touched}
+    assert {f["path"] for f in files if f["nb"] == 4} == untouched
+    assert not table.migration_status()["migrated"]
